@@ -2114,7 +2114,6 @@ object Compact {
         s"got $bits * ${dims.length}")
     val zspan = 1L << (bits * dims.length)
     try {
-      val anyMergeZ = plans.exists(_.mf.exists(_.merge))
       // ONE schema inference for the whole rewrite (the
       // binPackPartitionedInPlace pattern): every leaf branch read
       // with an explicit schema skips its own footer-inference pass at
@@ -2124,12 +2123,29 @@ object Compact {
       // reads the table-wide MERGED schema (files lacking a column
       // fill it with nulls on the normal parquet evolution path —
       // the same column set unionByName(allowMissing) produced).
+      val flaggedMerge = plans.exists(_.mf.exists(_.merge))
+      val firstSchema =
+        if (flaggedMerge) None
+        else Some(spark.read.parquet(
+          plans.head.live.head.getPath.toString).schema)
+      // the one-file schema is only safe if every leaf really has it:
+      // a leaf written outside the append protocol would otherwise
+      // lose its extra columns silently. One distributed footer job
+      // checks each leaf's first live file; on any difference the
+      // rewrite reads the merged schema instead (a type conflict then
+      // fails in the merge, never truncates).
+      val drifted = firstSchema.exists { z =>
+        val want = columnKey(z)
+        footerSchemas(spark, conf,
+          plans.map(_.live.head.getPath.toString)).values
+          .exists(columnKey(_) != want)
+      }
+      val anyMergeZ = flaggedMerge || drifted
       val zSchema =
         if (anyMergeZ)
           spark.read.option("mergeSchema", "true")
             .parquet(allLive.map(_.getPath.toString): _*).schema
-        else spark.read.parquet(
-          plans.head.live.head.getPath.toString).schema
+        else firstSchema.get
       waves.zipWithIndex.foreach { case (wave, w) =>
         val branches = wave.zipWithIndex.map { case (p, k) =>
           spark.read.schema(zSchema)
@@ -2559,6 +2575,42 @@ object Compact {
         try (idx, r.getRecordCount) finally r.close()
       }.collect().toMap
   }
+
+  /** Each file's Spark schema read from its parquet FOOTER by one
+    * distributed job (the footerCounts pattern): the row metadata
+    * Spark's writer stores, else the converted parquet schema. */
+  private def footerSchemas(spark: SparkSession, conf: Configuration,
+      files: Seq[String]): Map[String, org.apache.spark.sql.types.StructType] = {
+    if (files.isEmpty) return Map.empty
+    val ser = new SerConf(conf)
+    val slices = math.max(1, math.min(files.length,
+      spark.sparkContext.defaultParallelism * 4))
+    spark.sparkContext.parallelize(files.toVector, slices)
+      .map { full =>
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile
+          .fromPath(new Path(full), ser.value)
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try {
+          val meta = r.getFooter.getFileMetaData
+          val sparkJson = meta.getKeyValueMetaData.get(
+            org.apache.spark.sql.execution.datasources.parquet
+              .ParquetReadSupport.SPARK_METADATA_KEY)
+          (full, if (sparkJson != null) sparkJson
+            else new org.apache.spark.sql.execution.datasources.parquet
+              .ParquetToSparkSchemaConverter(ser.value)
+              .convert(meta.getSchema).json)
+        } finally r.close()
+      }.collect().map { case (f, json) =>
+        f -> org.apache.spark.sql.types.DataType.fromJson(json)
+          .asInstanceOf[org.apache.spark.sql.types.StructType]
+      }.toMap
+  }
+
+  /** A schema's column set — names and types, nullability ignored
+    * (readers widen every column to nullable). */
+  private def columnKey(
+      s: org.apache.spark.sql.types.StructType): Set[(String, String)] =
+    s.fields.map(f => f.name -> f.dataType.catalogString).toSet
 
   /** Per-file column BOUNDS read from parquet FOOTERS by one
     * distributed job (metadata only, no data pages — the footerCounts

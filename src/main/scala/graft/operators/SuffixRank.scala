@@ -533,13 +533,15 @@ object SuffixRank {
             .otherwise(col("__lcp")))
         .select("seq", "__da", "__pa", "__db", "__pb", "__lcp")
       if (dbg) {
-        // plan-shape probe for the stored-level partitioning claim:
-        // with levels checkpointed hash-partitioned on doc_id, the two
-        // level-side join branches need no Exchange (2 expected — the
-        // pairs side re-keys per level by construction)
+        // plan-shape probe for the descent joins: stored levels come
+        // back from localCheckpoint with UnknownPartitioning (the
+        // round-16 note above), so the level-side branches exchange
+        // as well as the re-keyed pairs side — a shuffle join costs
+        // one Exchange per side, not the 2 once expected
         val plan = stepped.queryExecution.executedPlan.toString
         System.err.println(s"[sa] descent-plan exchanges=" +
-          plan.linesIterator.count(_.contains("Exchange")))
+          plan.linesIterator.count(_.contains("Exchange")) +
+          " (levels read with UnknownPartitioning: a shuffle join exchanges both sides)")
       }
       pairs = trackedCp(stepped)
       // the eager checkpoint above cut the new pairs' lineage from

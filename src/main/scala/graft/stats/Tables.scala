@@ -53,34 +53,45 @@ object Tables {
 
   /** Returns analysis table (reference: plotting.py:134-147): Ann. alpha,
     * beta, top/bottom-quantile mean period-wise rate-converted return
-    * (bps) and mean spread (bps), one column per horizon. */
+    * (bps) and mean spread (bps), one column per horizon. Persists
+    * nothing: the caller gets no handle to release, so a persisted
+    * intermediate would stay cached until session end. */
   def returnsTable(
       fd: FactorData,
       demeaned: Boolean = true,
       groupAdjust: Boolean = false): DataFrame =
-    returnsTableCached(fd, demeaned, groupAdjust)._1
+    returnsTable0(fd, demeaned, groupAdjust, persist = false)._1
 
   /** [[returnsTable]] plus the persisted intermediates backing it —
-    * the persisted stage-1 frame otherwise stays cached until session
-    * end; callers that build many tables (the tear-sheet composites)
-    * take this variant and unpersist once materialized. */
+    * callers that build many tables (the tear-sheet composites) take
+    * this variant and unpersist once materialized. */
   def returnsTableCached(
       fd: FactorData,
       demeaned: Boolean = true,
-      groupAdjust: Boolean = false): (DataFrame, Seq[DataFrame]) = {
+      groupAdjust: Boolean = false): (DataFrame, Seq[DataFrame]) =
+    returnsTable0(fd, demeaned, groupAdjust, persist = true)
+
+  private def returnsTable0(
+      fd: FactorData,
+      demeaned: Boolean,
+      groupAdjust: Boolean,
+      persist: Boolean): (DataFrame, Seq[DataFrame]) = {
     val ab = Returns.factorAlphaBeta(fd, demeaned = demeaned,
       groupAdjust = groupAdjust)
-    // bounded (quantiles x dates) — persist so the top/bottom/spread
-    // rows all read one materialization instead of re-aggregating the
-    // panel per branch
-    val s1 = Returns.meanReturnsStage1(fd, demeaned = demeaned,
+    // bounded (quantiles x dates) — when persisted, the top/bottom/
+    // spread rows all read one materialization instead of
+    // re-aggregating the panel per branch
+    val stage1 = Returns.meanReturnsStage1(fd, demeaned = demeaned,
       groupAdjust = groupAdjust)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val s1 =
+      if (persist)
+        stage1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else stage1
     val mrq = rateConvert(Returns.meanReturnFromStage1(fd, s1), fd)
     val mrqDate = rateConvert(
       Returns.meanReturnFromStage1(fd, s1, byDate = true), fd,
       withStdErr = true)
-    (returnsTableFrom(fd, ab, mrq, mrqDate), Seq(s1))
+    (returnsTableFrom(fd, ab, mrq, mrqDate), if (persist) Seq(s1) else Nil)
   }
 
   /** [[returnsTable]] from precomputed components — the returns

@@ -3,6 +3,7 @@ package graft.vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** IVF-style approximate nearest neighbour: a k-means coarse quantizer
   * partitions the corpus into `nCells` inverted lists; queries probe the
@@ -11,9 +12,21 @@ import org.apache.spark.sql.functions._
   * than uniformly spread.
   *
   * Scale design: Lloyd iterations keep the PANEL distributed — only the
-  * k×dim centroid matrix (tiny) is collected per iteration; assignment
-  * is a codegen'd argmin expression over broadcast centroid literals;
-  * the probe join is an equi-join on cell id.
+  * k×dim centroid matrix (tiny) is collected per iteration. Cell
+  * assignment and the probe list are FUSED kernels
+  * ([[graft.functions.NearestCell]] `graft_nearest_cell`,
+  * [[graft.functions.NearestCells]] `graft_nearest_cells`): one
+  * codegen'd pass per row snaps the vector to the grid, computes the
+  * distance to each centroid and keeps the argmin (or the top-n by
+  * bounded insertion), with no k-length distance array and no sort.
+  * The centroid matrix reaches them only as a broadcast handle, one per
+  * matrix instance, so neither the task binary nor the plan string
+  * grows with the cell count. Both kernels are non-nullable (a null
+  * vector gives cell -1 / no probes), so the equi-join on cell id
+  * drops such rows without Catalyst inferring an `isnotnull` Filter
+  * that would evaluate the kernel a second time. The full distance
+  * array ([[quantizedDists]]) remains only for the ADC tables of
+  * [[Pq]].
   *
   * Exactness design: the quantizer runs entirely on a 1e6 fixed-point
   * grid — vector components snap to integers, per-cell sums are exact
@@ -29,14 +42,15 @@ import org.apache.spark.sql.functions._
   */
 object Ivf {
 
-  /** Fixed-point grid: one part per 1e6 (exact for |x| ≲ 5e3 at
-    * double-exact integer distances over ≤128 dims). */
-  private val Scale = 1e6
-
   /** Snap each float component to an integer-valued double on the
-    * fixed-point grid (round half-up, mirroring DuckDB's `round`). */
+    * fixed-point grid (one part per 1e6, exact for |x| ≲ 5e3 at
+    * double-exact integer distances over ≤128 dims): round half away
+    * from zero, mirroring DuckDB's `round` and bit-identical to Spark's
+    * `round(x * 1e6, 0)` ([[graft.functions.SnapGrid]], pinned in
+    * CellKernelSpec). */
   private def quantize(v: Column): Column =
-    transform(v, x => round(x.cast("double") * lit(Scale), 0))
+    ColumnBridge.column(
+      graft.functions.SnapGrid(ColumnBridge.expression(v)))
 
   /** Squared L2 distance between a quantized vector column and an
     * integer-valued centroid literal — exact (integer values, partial
@@ -52,10 +66,14 @@ object Ivf {
     * serializes the whole matrix into every task binary and plan
     * string — fine at 2048x64 (~1 MB), tens of MB per task at the
     * ~100k-cell coarse quantizers 100 TB IVFADC implies. 2^18 doubles
-    * (~2 MB) keeps every current query on the cheaper literal path. */
+    * (~2 MB) keeps every current ADC table on the cheaper literal
+    * path. */
   private[graft] val BcastThreshold: Long = 1L << 18
 
-  /** `array<double>` of squared L2 distances to every centroid. With
+  /** `array<double>` of squared L2 distances to every centroid — the
+    * ADC distance tables of [[Pq]] and the distance-keeping
+    * [[Embeddings.assignDist]]; cell assignment and probing use the
+    * fused [[nearestCell]] / [[nearestCellsOf]] kernels instead. With
     * [[graft.functions.GraftExtensions]] registered this is ONE
     * codegen'd `graft_l2sq_cells` call carrying the matrix as a single
     * reference object — or, past [[BcastThreshold]] elements, the
@@ -101,40 +119,32 @@ object Ivf {
     * handle rides the plan; executors fetch the matrix once. The
     * handle is memoized per matrix instance (see [[bcastMemo]]). */
   private[graft] def cellDistsBcast(
-      v: Column, centroids: Array[Array[Double]]): Column = {
-    val bc = bcastMemo.getOrBroadcast(
+      v: Column, centroids: Array[Array[Double]]): Column =
+    ColumnBridge.column(graft.functions.CellDistsBcast(
+      ColumnBridge.expression(v), matrixBc(centroids)))
+
+  /** The memoized broadcast handle of a centroid matrix. */
+  private def matrixBc(centroids: Array[Array[Double]]) =
+    bcastMemo.getOrBroadcast(
       org.apache.spark.sql.SparkSession.active.sparkContext, centroids)
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.functions.CellDistsBcast(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(v), bc))
-  }
 
-  /** Nearest-cell id from a distance array: first position of the
-    * minimum (ties break toward the lower cell id), 0-based. */
-  private def argminCell(dists: Column): Column =
-    (array_position(dists, array_min(dists)) - 1).cast("int")
-
-  /** The `n` nearest cell ids from a distance array, nearest first
-    * (distance then cell-id order). */
-  private def nearestCells(dists: Column, nCells: Int, n: Int): Column =
-    // CRITICAL: `dists` must be a DIRECT child (arrays_zip), never a
-    // reference inside a HOF lambda — `transform(sequence(...), i =>
-    // ... element_at(dists, i + 1) ...)` re-evaluates the whole
-    // distance kernel ONCE PER CELL, turning the probe-list build
-    // quadratic in nCells (invisible at 16 cells; a multi-hour hang at
-    // the 65k-cell coarse quantizers of the 100 TB layout — caught by
-    // ScaleProbeSpec). arrays_zip evaluates the kernel once per row;
-    // struct sort order (d asc, then cell asc) matches the old form.
-    slice(array_sort(arrays_zip(dists.as("d"),
-      sequence(lit(0), lit(nCells - 1)).as("cell"))),
-      1, n).getField("cell")
+  /** Fused nearest-cell assignment (0-based, ties toward the lower
+    * cell), NON-nullable: a null vector gives -1, which matches no
+    * cell of an equi-join. `snapIt = false` for inputs already on the
+    * grid (IVF residuals, the Lloyd sample). */
+  private[vector] def nearestCell(vec: Column,
+      centroids: Array[Array[Double]], snapIt: Boolean = true): Column =
+    ColumnBridge.column(graft.functions.NearestCell(
+      ColumnBridge.expression(vec), matrixBc(centroids), snapIt))
 
   /** Nearest-cell assignment (0-based) of a vector column against a
     * trained centroid matrix — the building block cluster-based
     * curation ops (e.g. [[SemDedup]]) compose with [[trainCentroids]].
-    * Exact: fixed-point quantization + integer distances. */
+    * Exact: fixed-point quantization + integer distances. Null in, null
+    * out; join sites inside this package use the non-nullable
+    * [[nearestCell]] instead. */
   def cellOf(vec: Column, centroids: Array[Array[Double]]): Column =
-    argminCell(cellDists(quantize(vec), centroids))
+    when(vec.isNotNull, nearestCell(vec, centroids))
 
   /** Exact integer-valued squared distances from a (raw) vector column
     * to every centroid, as `array<double>` — [[Pq]] uses this to build
@@ -148,7 +158,7 @@ object Ivf {
     * re-quantizing would double-scale it. */
   private[vector] def cellOfQuantized(
       vq: Column, centroids: Array[Array[Double]]): Column =
-    argminCell(cellDists(vq, centroids))
+    nearestCell(vq, centroids, snapIt = false)
 
   private[vector] def distsOfQuantized(
       vq: Column, centroids: Array[Array[Double]]): Column =
@@ -159,7 +169,8 @@ object Ivf {
   private[vector] def quantizedVec(vec: Column): Column = quantize(vec)
 
   /** Driver-side nearest-centroid assignment with EXACTLY the
-    * distributed argmin semantics: left-to-right double accumulation
+    * distributed argmin semantics ([[graft.functions.CellKernels.argmin]]
+    * on finite distances): left-to-right double accumulation
     * (exact integers on the grid, so order-free), strict `<` keeps the
     * first = lowest cell on ties. */
   private[vector] def nearestLocal(
@@ -180,11 +191,13 @@ object Ivf {
   }
 
   /** The `n` nearest cell ids (nearest first, ties toward the lower
-    * cell) of a raw vector column — the probe list [[Pq.ivfAdcTopK]]
-    * explodes. */
+    * cell; at most the cell count) of a raw vector column — the probe
+    * list [[ivfTopK]] and [[Pq.ivfAdcTopK]] explode. Non-nullable: a
+    * null vector probes no cell. */
   def nearestCellsOf(
       vec: Column, centroids: Array[Array[Double]], n: Int): Column =
-    nearestCells(cellDists(quantize(vec), centroids), centroids.length, n)
+    ColumnBridge.column(graft.functions.NearestCells(
+      ColumnBridge.expression(vec), matrixBc(centroids), n, snapIt = true))
 
   /** The quantized training sample, collected and sorted by id —
     * bounded (≤ ~trainCap rows × dim, a few MB at most) and
@@ -393,7 +406,7 @@ object Ivf {
         val aggCols = count(lit(1)).as("__n") +: (0 until dim).map(d =>
           sum(element_at(col("__q"), d + 1).cast("long")).as(s"__s$d"))
         val rows = persisted
-          .select(argminCell(cellDists(col("__q"), centroids)).as("__cell"),
+          .select(cellOfQuantized(col("__q"), centroids).as("__cell"),
             col("__q"))
           .groupBy("__cell")
           .agg(aggCols.head, aggCols.tail: _*)
@@ -452,23 +465,19 @@ object Ivf {
       trained.getOrElse(trainCentroids(corpus, nCells, iters, idCol, vecCol))
     // probe geometry derives from the TRAINED centroid count, not the
     // requested nCells — lloydLocal clamps to the sample size on tiny
-    // corpora, and probing cells that were never trained would match
-    // nothing (null distances sort first under the struct ordering and
-    // would silently fill the probe list with phantom cell ids)
+    // corpora (the probe kernel also caps its list at the cell count)
     val trainedCells = centroids.length
-    // empty corpus -> no centroids; the probe expression would otherwise
-    // build sequence(0, -1) = [0, -1] and element_at(dists, 0) throws
+    // empty corpus -> no centroids: nothing to probe, and no broadcast
     if (trainedCells == 0)
       return queries.select(col(idCol).as("query_id"), lit(0L).as("rank"),
         col(idCol).as("neighbor_id"), lit(0.0).as("cosine")).limit(0)
     val probes = math.min(nProbe, trainedCells)
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
       Similarity.l2Norm(col(vecCol)).as("__cn"),
-      argminCell(cellDists(quantize(col(vecCol)), centroids)).as("__cell"))
+      nearestCell(col(vecCol), centroids).as("__cell"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
         Similarity.l2Norm(col(vecCol)).as("__qn"),
-        explode(nearestCells(cellDists(quantize(col(vecCol)), centroids),
-          trainedCells, probes)).as("__cell"))
+        explode(nearestCellsOf(col(vecCol), centroids, probes)).as("__cell"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("__cos").desc, col("neighbor_id"))
     c.join(broadcast(q), Seq("__cell"))
@@ -562,8 +571,7 @@ object Ivf {
         lit(0L).as("selectivity_micro"), lit(0L).as("n_cells_hit"),
         lit(0L).as("max_cell_survivors"))
     val perCell = corpus.filter(predicate)
-      .select(argminCell(cellDists(quantize(col(vecCol)), centroids))
-        .as("__cell"))
+      .select(cellOf(col(vecCol), centroids).as("__cell"))
       .groupBy("__cell").agg(count(lit(1)).as("__c"))
     val sc = perCell.agg(
       coalesce(sum("__c"), lit(0L)).as("n_survivors"),

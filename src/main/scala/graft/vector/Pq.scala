@@ -152,7 +152,7 @@ object Pq {
       .toDF("__cell", "__cent"))
     val residual = zip_with(col("__vq"), col("__cent"), (x, c) => x - c)
     val codes = corpus.select(col(idCol).as("neighbor_id"),
-        Ivf.cellOf(col(vecCol), coarse).as("__cell"),
+        Ivf.nearestCell(col(vecCol), coarse).as("__cell"),
         Ivf.quantizedVec(col(vecCol)).as("__vq"))
       .join(centsDf, Seq("__cell"))
       .withColumn("__r", residual)

@@ -112,19 +112,31 @@ object SemDedup {
       else
         Ivf.trainCentroidsDistributed(nrm, cells, iters, idCol, "__nv")
     }
+    // the non-nullable kernel (-1 for a null vector): the cell
+    // self-join then infers no isnotnull(<kernel>) Filter that would
+    // evaluate it twice; null vectors leave the join through a filter
+    // on the RAW column, which pushes to the scan. The norms are made
+    // non-nullable for the same reason: the cosine filter would infer
+    // isnotnull(norm) and push it below the Project as
+    // isnotnull(sqrt(graft_dot(v, v))). A norm is null only for a
+    // vector with a null component, whose pair dot is null too, so the
+    // pair is dropped either way.
     val a = nrm.select(col(idCol), col(vecCol), col("__n"),
-      Ivf.cellOf(col("__nv"), centroids).as("cell"))
-    val pairs = a.select(col(idCol).as("__ida"), col(vecCol).as("__va"),
-        col("__n").as("__na"), col("cell"))
-      .join(a.select(col(idCol).as("__idb"), col(vecCol).as("__vb"),
-        col("__n").as("__nb"), col("cell")), Seq("cell"))
+      Ivf.nearestCell(col("__nv"), centroids).as("cell"))
+    val live = a.filter(col(vecCol).isNotNull)
+    val norm = coalesce(col("__n"), lit(0.0))
+    val pairs = live.select(col(idCol).as("__ida"), col(vecCol).as("__va"),
+        norm.as("__na"), col("cell"))
+      .join(live.select(col(idCol).as("__idb"), col(vecCol).as("__vb"),
+        norm.as("__nb"), col("cell")), Seq("cell"))
       .filter(col("__ida") < col("__idb"))
       .withColumn("__cos",
         Similarity.dot(col("__va"), col("__vb")) / (col("__na") * col("__nb")))
       .filter(col("__cos") >= threshold)
     val dups = pairs.groupBy(col("__idb").as(idCol))
       .agg(count(lit(1)).as("n_dups"), min(col("__ida")).as("__keep"))
-    a.select(col(idCol), col("cell").cast("long").as("cell"))
+    a.select(col(idCol),
+        when(col(vecCol).isNotNull, col("cell").cast("long")).as("cell"))
       .join(dups, Seq(idCol), "left")
       .select(col(idCol), col("cell"),
         coalesce(col("n_dups"), lit(0L)).as("n_dups"),

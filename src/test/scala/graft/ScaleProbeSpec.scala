@@ -7,8 +7,9 @@ import graft.vector.{Ivf, Similarity}
 
 /** End-to-end probe of the LARGE-quantizer IVF read path — the regime a
   * 100 TB IVFADC implies (coarse quantizers of 10^4-10^5 cells), where
-  * the centroid matrix must ride a real Spark broadcast
-  * ([[graft.functions.CellDistsBcast]]) instead of a plan literal.
+  * the centroid matrix must ride a real Spark broadcast (the fused
+  * [[graft.functions.NearestCell]] / [[graft.functions.NearestCells]]
+  * kernels carry only its handle) instead of a plan literal.
   * Round 7 pinned literal≡broadcast≡interpreted parity at 10k cells;
   * this probe runs the actual retrieval JOIN at 65,536 cells over the
   * 100k-vector probe corpus (sf0.1's embeddings x50, dimension-rotated
@@ -57,11 +58,14 @@ class ScaleProbeSpec extends AnyFunSuite with SparkSpec {
     val top = Ivf.ivfTopK(corpus, queries, k = 10, nProbe = 64,
       trained = Some(cents))
 
-    // the plan must carry the broadcast-backed kernel, not the literal
-    // form (which would serialize 33.5 MB into every task binary)
+    // the plan must carry the broadcast-backed fused kernel, not a
+    // centroid literal (which would serialize 33.5 MB into every task
+    // binary and print into the plan string)
     val plan = top.queryExecution.executedPlan.toString
-    assert(plan.contains("graft_l2sq_cells_bcast"),
-      "large quantizer must route through CellDistsBcast")
+    assert(plan.contains("graft_nearest_cell") && plan.contains("Broadcast("),
+      "large quantizer must route through the broadcast-backed fused kernel")
+    assert(plan.length < (1 << 16),
+      s"plan string is ${plan.length} chars: a centroid literal leaked in")
 
     val ann = top.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet

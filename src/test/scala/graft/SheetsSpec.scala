@@ -89,6 +89,16 @@ class SheetsSpec extends AnyFunSuite with SparkSpec {
       org.apache.spark.storage.StorageLevel.NONE))
   }
 
+  test("one-shot returnsTable leaves nothing cached") {
+    val sc = spark.sparkContext
+    fd.df.count() // the factor panel's own cache is not the table's
+    val before = sc.getRDDStorageInfo.map(_.id).toSet
+    assert(Tables.returnsTable(fd).collect().length === 5)
+    val added = sc.getRDDStorageInfo.filterNot(i => before(i.id))
+    assert(added.isEmpty,
+      s"returnsTable left ${added.length} cached RDD(s): ${added.mkString("; ")}")
+  }
+
   test("full tear sheet") {
     val s = Sheets.createFullTearSheet(fdG, byGroup = true)
     nonEmpty(s.quantileStats, "factor_quantile")

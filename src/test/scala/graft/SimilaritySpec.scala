@@ -793,11 +793,19 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
         Literal.create(row7, ArrayType(FloatType)), bcHandle)
       .eval(null).asInstanceOf[ArrayData].toDoubleArray.toSeq
     assert(interp === lit(7)._2)
-    // the auto-selector routes a 10k-cell matrix to the broadcast form
-    val plan = vecs.select(Ivf.cellOf(col("embedding"), centroids))
+    // the auto-selector routes a 10k-cell distance table to the
+    // broadcast form
+    val plan = vecs.select(Ivf.quantizedDists(col("embedding"), centroids))
       .queryExecution.executedPlan.toString
     assert(plan.contains("graft_l2sq_cells_bcast"),
       "cellDists did not select the broadcast form above the threshold")
+    // cell assignment runs the fused kernel over the broadcast handle,
+    // never a centroid literal, at any cell count
+    val cellPlan = vecs.select(Ivf.cellOf(col("embedding"), centroids))
+      .queryExecution.executedPlan.toString
+    assert(cellPlan.contains("graft_nearest_cell") &&
+      cellPlan.contains("Broadcast(") && cellPlan.length < (1 << 14),
+      "cellOf did not run the broadcast-backed fused kernel")
   }
 
   test("multimodal: planted WAV rows take the real audio decode path") {

@@ -182,4 +182,31 @@ class ZorderSpec extends AnyFunSuite with SparkSpec {
       .groupBy(identity).view.mapValues(_.length).toMap
     assert(got == want)
   }
+
+  test("optimizeZorderPartitioned keeps the columns of a drifted leaf") {
+    import spark.implicits._
+    import graft.operators.Compact
+    val base = Files.createTempDirectory("graft-zdrift").toString
+    (0 until 600).map(i => (i.toLong, (i % 2).toLong, (i * 37 % 101).toLong,
+        (i * 53 % 97).toLong))
+      .toDF("id", "p", "a", "b").repartition(3)
+      .write.partitionBy("p").parquet(s"$base/t")
+    // a third leaf written outside the append protocol, with one more
+    // column than the leaf the rewrite takes its schema from
+    (600 until 900).map(i => (i.toLong, (i * 37 % 101).toLong,
+        (i * 53 % 97).toLong, s"x$i"))
+      .toDF("id", "a", "b", "extra").repartition(2)
+      .write.parquet(s"$base/t/p=2")
+    Compact.optimizeZorderPartitioned(spark, s"$base/t", Seq("a", "b"),
+      targetBytes = 1L << 20, bits = 8)
+    val back = Compact.readPartitioned(spark, s"$base/t")
+    assert(back.columns.contains("extra"),
+      "the drifted leaf's extra column was dropped by the rewrite")
+    assert(back.count() === 900L)
+    val extra = back.filter(col("p") === 2).select("id", "extra").collect()
+      .map(r => r.getLong(0) -> r.getString(1))
+    assert(extra.length === 300 && extra.forall { case (id, e) => e == s"x$id" })
+    // the other leaves read the added column as null
+    assert(back.filter(col("p") < 2 && col("extra").isNotNull).count() === 0L)
+  }
 }
