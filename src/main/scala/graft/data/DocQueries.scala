@@ -2802,15 +2802,6 @@ object DocQueries {
         .orderBy("doc_id")
     }),
     "q_corpus_pipeline" -> ((s, dir) => {
-      // env-guarded stage timer (dev evidence; prints nothing in the
-      // bench's default environment)
-      val __pdbg = sys.env.contains("GRAFT_PIPE_DEBUG")
-      var __pt0 = System.nanoTime()
-      def __pm(label: String): Unit = if (__pdbg) {
-        val now = System.nanoTime()
-        System.err.println(f"[pipe] $label%-16s +${(now - __pt0) / 1e9}%6.2f s")
-        __pt0 = now
-      }
       // END-TO-END CORPUS REFRESH — the 2.12 extension family's
       // tear-sheet analogue: every stage is an operator with its own
       // oracle row, chained as ONE dataflow whose seams this row pins.
@@ -2872,7 +2863,6 @@ object DocQueries {
       p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
       Warc.write(resp.unionByName(reqs).repartition(4, col("record_id")),
         tmp, gzip = true)
-      __pm("warc-write")
       val decoded = Warc.read(s, tmp)
         .filter(col("warc_type") === "response")
         .select(
@@ -2897,7 +2887,6 @@ object DocQueries {
           TextOps.normalizeText(TextOps.htmlToText(wetWrap(col("text"))))
             .as("ntext"))
         .localCheckpoint()
-      __pm("exw-cp")
       val filter = Bloom.buildFilter(
         exw.select(col("ntext").as("text")), "text", mBits = 2048, k = 3)
       // the verdict table fans SEVEN plan branches out of this chain
@@ -2918,7 +2907,6 @@ object DocQueries {
         .withColumn("gate_kept", !col("seen_exact"))
         .drop("__sx")
         .localCheckpoint()
-      __pm("gated-cp")
       val gsurv = gated.filter(col("gate_kept")).select("doc_id", "ntext")
       // quality: rule half (gopher) + learned half (pre-trained
       // classifier, the q_quality_clf weights) — kept = both agree.
@@ -2943,7 +2931,6 @@ object DocQueries {
         .withColumn("quality_kept",
           col("quality_pass") === 1 && col("predicted") === 1)
         .localCheckpoint()
-      __pm("qual-cp")
       val qsurv = gsurv.join(
         qual.filter(col("quality_kept")).select("doc_id"), Seq("doc_id"))
       // LM perplexity gate (CCNet): the held corpus is the reference
@@ -2956,7 +2943,6 @@ object DocQueries {
           qsurv.select(col("doc_id"), col("ntext").as("text")))
         .withColumn("lm_kept", col("bucket") =!= "tail")
         .localCheckpoint()
-      __pm("lm-cp")
       val lsurv = qsurv.join(
         lm.filter(col("lm_kept")).select("doc_id"), Seq("doc_id"))
       // exact dedup among LM survivors: min-id keeper per content.
@@ -2974,7 +2960,6 @@ object DocQueries {
       val span = Rewrite.spanDedup(
         esurv.withColumnRenamed("ntext", "text"), k = 5)
         .localCheckpoint()
-      __pm("span-cp")
       // merge the refresh into the held corpus: survivors upsert
       // (ts = id*10+5 beats current's id*10), tombstone feed deletes
       // evens %20==2; then shard the merged corpus for the dataloader
@@ -2988,7 +2973,6 @@ object DocQueries {
           lit("").as("text"), lit(true).as("deleted"))
       val merged = CorpusOps.mergeCorpus(cur, upd.unionByName(dels))
         .localCheckpoint()
-      __pm("merged-cp")
       val shards = CorpusOps.epochShard(
         merged.select("doc_id"), epoch = 2, nShards = 8)
       // sentinel-coalesced flags: a doc dropped before a stage reports

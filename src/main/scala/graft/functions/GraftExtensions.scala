@@ -4,13 +4,13 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session extension registering graft's native Catalyst functions —
-  * attach with `SparkSession.builder().withExtensions(new
-  * GraftExtensions)` or `spark.sql.extensions=graft.functions
-  * .GraftExtensions`. Operators in [[graft.vector.Similarity]] detect
-  * the registration and switch their hot kernels from the HOF
-  * composition to the native expression (bit-identical results, so the
-  * choice never affects oracle parity — only speed). */
+/** Session extension registering graft's native Catalyst functions by
+  * name for SQL callers — attach with `SparkSession.builder()
+  * .withExtensions(new GraftExtensions)` or `spark.sql.extensions=
+  * graft.functions.GraftExtensions` — plus its optimizer rules and
+  * planner strategy. The DataFrame helpers ([[graft.text.TextOps]],
+  * [[graft.vector.Similarity]], …) build the same expressions
+  * directly and need no registration. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {

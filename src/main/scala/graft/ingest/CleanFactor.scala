@@ -15,7 +15,6 @@ final case class FactorData(
     horizons: Seq[Horizon],
     calendar: TradingCalendar) {
   def returnCols: Seq[String] = horizons.map(_.label)
-  def hasGroup: Boolean = df.columns.contains("group")
 }
 
 /** get_clean_factor / get_clean_factor_and_forward_returns

@@ -50,23 +50,6 @@ object Horizon {
     sb.result()
   }
 
-  /** Parse a label like "1D", "1h", "3h15m", "1D1h" back to a Duration
-    * (inverse of durationToLabel; pd.Timedelta-compatible subset). */
-  def parseLabel(label: String): Duration = {
-    val re = "(\\d+)(ms|us|ns|[Dhms])".r
-    re.findAllMatchIn(label).foldLeft(Duration.ZERO) { (acc, m) =>
-      val n = m.group(1).toLong
-      acc.plus(m.group(2) match {
-        case "D"  => Duration.ofDays(n)
-        case "h"  => Duration.ofHours(n)
-        case "m"  => Duration.ofMinutes(n)
-        case "s"  => Duration.ofSeconds(n)
-        case "ms" => Duration.ofMillis(n)
-        case "us" => Duration.ofNanos(n * 1000L)
-        case "ns" => Duration.ofNanos(n)
-      })
-    }
-  }
 }
 
 /** Trading calendar inferred from the observed dates: the traded weekdays

@@ -403,12 +403,7 @@ object SuffixRank {
     var chainCp = remRanks
     var h = 1L
     var tiedDone = false
-    val dbg = sys.env.contains("GRAFT_SA_DEBUG")
-    var tRound = System.nanoTime()
     while (h < maxLen && !tiedDone) cleanOnError {
-      if (dbg) { val now = System.nanoTime()
-        System.err.println(f"[sa] round h=$h%-8d +${(now - tRound) / 1e9}%6.2f s")
-        tRound = now }
       // the guard protects block-manager RETENTION, so it applies to
       // the memory store only; disk levels are scratch files
       if (!diskMode && totalLevels >= maxLevels)
@@ -461,7 +456,8 @@ object SuffixRank {
       // UnknownPartitioning and no ordering (probe: a repartitioned+
       // sorted localCheckpoint reports UnknownPartitioning(0)), so the
       // extra exchange is never reused by the next round or the
-      // descent. See the descent-plan exchange probe below.
+      // descent, whose joins exchange the level side as well as the
+      // re-keyed pairs side.
       val next = trackedCp(keyed.join(pairRank, Seq("__rank", "__r2"))
         .select(col("doc_id"), col("pos"), col("__rb").as("__rank"),
           col("__rem"), col("__c")))
@@ -509,13 +505,7 @@ object SuffixRank {
       .select(col("seq"), col("__da"), col("__pa"),
         col("doc_id").as("__db"), col("pos").as("__pb"))
       .withColumn("__lcp", lit(0L)))
-    if (dbg) { val now = System.nanoTime()
-      System.err.println(f"[sa] seqed       +${(now - tRound) / 1e9}%6.2f s")
-      tRound = now }
     cleanOnError(store.levels.foreach { case (span, lvlThunk) =>
-      if (dbg) { val now = System.nanoTime()
-        System.err.println(f"[sa] descent span=$span%-8d +${(now - tRound) / 1e9}%6.2f s")
-        tRound = now }
       val lvl = lvlThunk()
       val prevPairs = pairs
       val la = lvl.select(col("doc_id").as("__da"),
@@ -532,17 +522,6 @@ object SuffixRank {
             col("__rka") === col("__rkb"), col("__lcp") + span)
             .otherwise(col("__lcp")))
         .select("seq", "__da", "__pa", "__db", "__pb", "__lcp")
-      if (dbg) {
-        // plan-shape probe for the descent joins: stored levels come
-        // back from localCheckpoint with UnknownPartitioning (the
-        // round-16 note above), so the level-side branches exchange
-        // as well as the re-keyed pairs side — a shuffle join costs
-        // one Exchange per side, not the 2 once expected
-        val plan = stepped.queryExecution.executedPlan.toString
-        System.err.println(s"[sa] descent-plan exchanges=" +
-          plan.linesIterator.count(_.contains("Exchange")) +
-          " (levels read with UnknownPartitioning: a shuffle join exchanges both sides)")
-      }
       pairs = trackedCp(stepped)
       // the eager checkpoint above cut the new pairs' lineage from
       // both this level and the previous pairs frame: free them

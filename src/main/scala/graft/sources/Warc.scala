@@ -20,18 +20,6 @@ object Warc {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.format("warc").load(path)
 
-  /** WARC → WET: visible text of every response record. The
-    * `warc_type` filter pushes into the scan (request/metadata
-    * payloads are skipped, not parsed) and the HTML extraction is the
-    * native [[graft.functions.HtmlText]] kernel — the whole step is
-    * one narrow pass, no shuffle. */
-  def wetExtract(spark: SparkSession, path: String): DataFrame =
-    read(spark, path)
-      .filter(col("warc_type") === "response")
-      .select(col("target_uri"), col("warc_date"),
-        graft.text.TextOps.htmlToText(col("payload").cast("string"))
-          .as("text"))
-
   /** Write `df` as WARC part files under `dir`.
     *
     * Expected columns (missing optional ones default):

@@ -90,13 +90,6 @@ private case class ChunkDfState(docIds: Seq[Long], over: Boolean, lastTs: Long)
   */
 object Streaming {
 
-  /** Streaming source over a parquet events directory. */
-  def eventStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, " +
-        "value DOUBLE, props STRING")
-      .parquet(dir)
-
   /** Per-(window, event_type) incremental stats: count, sum, mean of
     * `value` over tumbling event-time windows; late data beyond the
     * watermark is dropped and window state is purged. */

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import TextOps._
 
@@ -155,9 +156,10 @@ object Cdc {
       idCol: String = "doc_id"): DataFrame = {
     require(maskBits >= 1 && maskBits <= 30,
       s"maskBits must be in 1..30, got $maskBits")
-    df.select(col(idCol), posexplode(call_function(
-        graft.functions.GraftExtensions.GearChunksName,
-        col(binCol).cast("binary"), lit(maskBits)))
+    df.select(col(idCol), posexplode(ColumnBridge.column(
+        graft.functions.GearChunks(
+          ColumnBridge.expression(col(binCol).cast("binary")),
+          ColumnBridge.expression(lit(maskBits)))))
         .as(Seq("chunk_idx", "__c")))
       .select(col(idCol), col("chunk_idx"),
         col("__c.start").as("start"), col("__c.len").as("len"),

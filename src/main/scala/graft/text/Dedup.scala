@@ -520,48 +520,6 @@ object Dedup {
     agg.select(col("__id").as(idCol), hashCol.as("simhash"))
   }
 
-  /** Near-duplicate pairs by banded SimHash: the 56-bit signature is
-    * cut into `bands` equal slices; documents sharing any full slice
-    * land in one bucket (equi-join key, never all-pairs) and bucket
-    * neighbours are verified with the exact Hamming distance
-    * `bit_count(xor)`. Pigeonhole recall guarantee: with
-    * `bands > maxHamming`, any pair within maxHamming differing bits
-    * agrees on at least one full band, so recall at the threshold is
-    * exactly 1 — unlike MinHash LSH this candidate stage loses
-    * nothing. All-integer end to end (engine-reproducible).
-    * Output: (doc_a, doc_b, hamming <= maxHamming). */
-  def simHashNearDups(
-      docs: DataFrame,
-      maxHamming: Int = 3,
-      bands: Int = 4,
-      textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
-    val bits = 56
-    require(bands > maxHamming,
-      s"pigeonhole recall needs bands ($bands) > maxHamming ($maxHamming)")
-    require(bits % bands == 0, s"bands ($bands) must divide $bits")
-    val bw = bits / bands
-    val sig = simHash(docs, textCol, idCol)
-      .select(col(idCol).as("__id"), col("simhash"))
-    // bucket key packs (band index, band value) into one long:
-    // b * 2^bw + slice — a single equi-join column
-    val buckets = sig.select(col("__id"), col("simhash"),
-      explode(array((0 until bands).map(b =>
-        shiftright(col("simhash"), b * bw).bitwiseAND(lit((1L << bw) - 1)) +
-          lit(b.toLong << bw)): _*)).as("__bk"))
-    val ca = buckets.select(col("__bk"), col("__id").as("doc_a"),
-      col("simhash").as("__sa"))
-    val cb = buckets.select(col("__bk"), col("__id").as("doc_b"),
-      col("simhash").as("__sb"))
-    ca.join(cb, Seq("__bk")).filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b", "__sa", "__sb").distinct()
-      .withColumn("hamming",
-        bit_count(col("__sa").bitwiseXOR(col("__sb"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming")
-      .orderBy("doc_a", "doc_b")
-  }
-
   /** Winnowing document fingerprints (Schleimer et al.'s local minima
     * scheme): hash every positional n-gram, take the minimum hash of
     * each sliding window of `w` consecutive shingles (full windows

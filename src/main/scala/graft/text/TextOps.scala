@@ -1,13 +1,19 @@
 package graft.text
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+
+import graft.functions.{Hash56, HtmlText, ShingleSeq, TextNorm, Tokens, UrlCanon}
 
 /** Shared column-level text primitives for the document pipeline.
   *
-  * Every helper is built from codegen'd Spark built-ins only (no UDFs)
-  * and is deliberately expressible 1:1 in ANSI-ish SQL so the DuckDB
-  * oracle can replicate each operator bit-for-bit:
+  * Every helper is a codegen'd Catalyst expression (no UDFs) —
+  * graft's native kernels are built directly as expressions, so they
+  * need no function registration on the session — and is
+  * deliberately expressible 1:1 in ANSI-ish SQL so the DuckDB oracle
+  * can replicate each operator bit-for-bit:
   *
   *  - tokens: single-space split (the corpus is pre-normalized); empty
   *    tokens dropped on both sides.
@@ -18,103 +24,57 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  /** Non-empty tokens of a single-space-separated text column. When the
-    * session registered [[graft.functions.GraftExtensions]], the native
-    * one-pass [[graft.functions.Tokens]] kernel is used (no regex, no
-    * intermediate empty tokens); results are identical either way. */
-  def tokens(text: Column): Column =
-    if (nativeTokens)
-      call_function(graft.functions.GraftExtensions.TokensName, text)
-    else hofTokens(text)
+  /** A native kernel over one column, built as the expression itself. */
+  private def native(kernel: Expression => Expression)(c: Column): Column =
+    ColumnBridge.column(kernel(ColumnBridge.expression(c)))
 
-  /** Builtin-only tokenizer — regex split + non-empty filter. */
+  /** Non-empty tokens of a single-space-separated text column — the
+    * native one-pass [[graft.functions.Tokens]] kernel (no regex, no
+    * intermediate empty tokens; identical to [[hofTokens]]). */
+  def tokens(text: Column): Column = native(Tokens(_))(text)
+
+  /** Builtin-only tokenizer — regex split + non-empty filter; the
+    * reference [[tokens]] is checked against. */
   def hofTokens(text: Column): Column =
     filter(split(text, " "), t => t =!= "")
-
-  private def nativeTokens: Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession.exists { s =>
-      try s.catalog.functionExists(graft.functions.GraftExtensions.TokensName)
-      catch { case scala.util.control.NonFatal(_) => false }
-    }
 
   /** Visible text of an HTML column — the WET extraction step
     * ([[graft.functions.HtmlText]]: tag strip, script/style/head
     * content drop, comment drop, entity decode, block-break + collapse
-    * normal form). Requires [[graft.functions.GraftExtensions]] on the
-    * session; there is no builtin composition that can express the
-    * state machine. */
-  def htmlToText(html: Column): Column = {
-    val name = graft.functions.GraftExtensions.HtmlTextName
-    val registered =
-      org.apache.spark.sql.SparkSession.getActiveSession.exists { s =>
-        try s.catalog.functionExists(name)
-        catch { case scala.util.control.NonFatal(_) => false }
-      }
-    require(registered,
-      s"$name is not registered - attach graft.functions.GraftExtensions")
-    call_function(name, html)
-  }
+    * normal form); no builtin composition can express the state
+    * machine. */
+  def htmlToText(html: Column): Column = native(HtmlText(_))(html)
 
   /** RFC 3986-normalized URL ([[graft.functions.UrlCanon]]: scheme/
     * host lowercase, fragment drop, default-port strip, dot-segment
     * resolution, percent-encoding normalization) — the key-normal form
-    * URL-level crawl dedup and frontier joins key on. Requires
-    * [[graft.functions.GraftExtensions]] on the session; dot-segment
+    * URL-level crawl dedup and frontier joins key on; dot-segment
     * resolution has no builtin composition. */
-  def canonicalizeUrl(url: Column): Column = {
-    val name = graft.functions.GraftExtensions.UrlCanonName
-    val registered =
-      org.apache.spark.sql.SparkSession.getActiveSession.exists { s =>
-        try s.catalog.functionExists(name)
-        catch { case scala.util.control.NonFatal(_) => false }
-      }
-    require(registered,
-      s"$name is not registered - attach graft.functions.GraftExtensions")
-    call_function(name, url)
-  }
+  def canonicalizeUrl(url: Column): Column = native(UrlCanon(_))(url)
 
   /** Unicode normal form for cross-document comparison: NFC canonical
     * composition + root-locale lowercase ([[graft.functions.TextNorm]]
-    * — no builtin can express NFC, so the kernel is required, the
-    * [[canonicalizeUrl]] contract). Normalize BEFORE hashing/shingling:
-    * precomposed vs combining-mark spellings of the same word
-    * otherwise fragment every dedup/count key. */
-  def normalizeText(text: Column): Column = {
-    val name = graft.functions.GraftExtensions.TextNormName
-    val registered =
-      org.apache.spark.sql.SparkSession.getActiveSession.exists { s =>
-        try s.catalog.functionExists(name)
-        catch { case scala.util.control.NonFatal(_) => false }
-      }
-    require(registered,
-      s"$name is not registered - attach graft.functions.GraftExtensions")
-    call_function(name, text)
-  }
+    * — no builtin can express NFC). Normalize BEFORE hashing/
+    * shingling: precomposed vs combining-mark spellings of the same
+    * word otherwise fragment every dedup/count key. */
+  def normalizeText(text: Column): Column = native(TextNorm(_))(text)
 
   /** All n-token shingles (with duplicates, in positional order);
-    * empty array when the document has fewer than n tokens. When the
-    * session registered [[graft.functions.GraftExtensions]], the native
-    * codegen'd [[graft.functions.ShingleSeq]] kernel is used; the HOF
-    * composition is the extension-free fallback. Both produce identical
-    * arrays (same join, same ordering, same empty-on-short semantics),
-    * so the choice never affects oracle parity — only speed. */
+    * empty array when the document has fewer than n tokens — the
+    * native codegen'd [[graft.functions.ShingleSeq]] kernel, identical
+    * to [[hofShingleSeq]] (same join, same ordering, same
+    * empty-on-short semantics). */
   def shingleSeq(toks: Column, n: Int): Column =
-    if (nativeShingles)
-      call_function(graft.functions.GraftExtensions.ShingleSeqName, toks, lit(n))
-    else hofShingleSeq(toks, n)
+    ColumnBridge.column(ShingleSeq(ColumnBridge.expression(toks),
+      ColumnBridge.expression(lit(n))))
 
-  /** `transform`/`slice`/`concat_ws` shingles — builtin-only fallback. */
+  /** `transform`/`slice`/`concat_ws` shingles — the builtin-only
+    * reference [[shingleSeq]] is checked against. */
   def hofShingleSeq(toks: Column, n: Int): Column =
     when(size(toks) >= n,
       transform(sequence(lit(1), size(toks) - (n - 1)),
         i => concat_ws(" ", slice(toks, i, lit(n)))))
       .otherwise(array().cast("array<string>"))
-
-  private def nativeShingles: Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession.exists { s =>
-      try s.catalog.functionExists(graft.functions.GraftExtensions.ShingleSeqName)
-      catch { case scala.util.control.NonFatal(_) => false }
-    }
 
   /** Distinct shingle set of a document. */
   def shingles(toks: Column, n: Int): Column = array_distinct(shingleSeq(toks, n))
@@ -122,24 +82,15 @@ object TextOps {
   /** First 56 bits of md5(s) as a non-negative long. Stable across
     * engines and platforms (md5 is byte-defined), cheap enough for the
     * hot path (one md5 per shingle), and 56 bits keeps every derived
-    * product `a * (h % p) + b` inside 63 bits. When the session
-    * registered [[graft.functions.GraftExtensions]], the native
-    * [[graft.functions.Hash56]] kernel is used (digest bytes -> long,
-    * no hex round-trip); values are identical either way. */
-  def hash56(s: Column): Column =
-    if (nativeHash56)
-      call_function(graft.functions.GraftExtensions.Hash56Name, s)
-    else hofHash56(s)
+    * product `a * (h % p) + b` inside 63 bits. The native
+    * [[graft.functions.Hash56]] kernel (digest bytes -> long, no hex
+    * round-trip), identical to [[hofHash56]]. */
+  def hash56(s: Column): Column = native(Hash56(_))(s)
 
-  /** Builtin-only hash56 — md5 hex, slice, radix-16 parse. */
+  /** Builtin-only hash56 — md5 hex, slice, radix-16 parse; the
+    * reference [[hash56]] is checked against. */
   def hofHash56(s: Column): Column =
     conv(substring(md5(s), 1, 14), 16, 10).cast("long")
-
-  private def nativeHash56: Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession.exists { s =>
-      try s.catalog.functionExists(graft.functions.GraftExtensions.Hash56Name)
-      catch { case scala.util.control.NonFatal(_) => false }
-    }
 
   /** Modulus for the MinHash permutation family. */
   val HashP: Long = 1000000007L
@@ -160,8 +111,22 @@ object TextOps {
     }
   }
 
-  /** j-th universal-hash parameters (aj, bj); aj reduced mod P first so
-    * aj * (h mod P) + bj stays < 2^63. */
-  def hashParams(j: Int): (Long, Long) =
-    (((j + 1).toLong * 2654435761L) % HashP, ((j + 1).toLong * 40503L) % HashP)
+  /** j-th universal-hash parameters (aj, bj), 1 <= aj < P and
+    * 0 <= bj < P, so aj * (h mod P) + bj stays < 2^63. Each pair comes
+    * from a fixed 64-bit mixer (SplitMix64's finalizer over j's own
+    * seeds) reduced mod P, so the hash functions are independent
+    * draws from the universal family. Parameters that are multiples
+    * of one pair — aj = (j+1)·a0, bj = (j+1)·b0 — would make every
+    * hash (j+1)·h0 mod P, and banded LSH then misses near-duplicates
+    * independent hashes find. */
+  def hashParams(j: Int): (Long, Long) = {
+    def mix(x: Long): Long = {
+      var z = x + 0x9E3779B97F4A7C15L
+      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+      z ^ (z >>> 31)
+    }
+    def modP(x: Long): Long = java.lang.Long.remainderUnsigned(x, HashP)
+    (1L + modP(mix(2L * j)) % (HashP - 1L), modP(mix(2L * j + 1L)))
+  }
 }

@@ -52,15 +52,6 @@ object Ivf {
     ColumnBridge.column(
       graft.functions.SnapGrid(ColumnBridge.expression(v)))
 
-  /** Squared L2 distance between a quantized vector column and an
-    * integer-valued centroid literal — exact (integer values, partial
-    * sums < 2^53). */
-  private def l2sq(v: Column, c: Array[Double]): Column =
-    aggregate(zip_with(v, lit(c), (x, y) => {
-      val d = x - y
-      d * d
-    }), lit(0.0), (acc, x) => acc + x)
-
   /** Past this many matrix elements (cells x dim), the centroid matrix
     * ships as a BROADCAST instead of a plan literal: the literal form
     * serializes the whole matrix into every task binary and plan
@@ -73,18 +64,15 @@ object Ivf {
   /** `array<double>` of squared L2 distances to every centroid — the
     * ADC distance tables of [[Pq]] and the distance-keeping
     * [[Embeddings.assignDist]]; cell assignment and probing use the
-    * fused [[nearestCell]] / [[nearestCellsOf]] kernels instead. With
-    * [[graft.functions.GraftExtensions]] registered this is ONE
-    * codegen'd `graft_l2sq_cells` call carrying the matrix as a single
-    * reference object — or, past [[BcastThreshold]] elements, the
-    * bitwise-identical broadcast-backed variant
+    * fused [[nearestCell]] / [[nearestCellsOf]] kernels instead. This
+    * is ONE codegen'd `graft_l2sq_cells` call carrying the matrix as a
+    * single reference object — or, past [[BcastThreshold]] elements,
+    * the bitwise-identical broadcast-backed variant
     * ([[graft.functions.CellDistsBcast]], parity-pinned in
-    * SimilaritySpec); the built-in fallback embeds one `l2sq` per
-    * centroid (nCells x dim literal nodes — the plan-bloat this
-    * expression exists to avoid). All accumulate (x-c)^2
-    * left-to-right in double; on the fixed-point grid every term and
-    * partial sum is an exact integer, so results are bit-identical
-    * regardless of order. */
+    * SimilaritySpec). Both accumulate (x-c)^2 left-to-right in
+    * double; on the fixed-point grid every term and partial sum is an
+    * exact integer, so results are bit-identical regardless of
+    * order. */
   private def cellDists(v: Column, centroids: Array[Array[Double]]): Column = {
     val elems = centroids.length.toLong *
       (if (centroids.isEmpty) 0L else centroids(0).length.toLong)
@@ -94,16 +82,10 @@ object Ivf {
 
   /** Literal-matrix form (small quantizers). */
   private[graft] def cellDistsLiteral(
-      v: Column, centroids: Array[Array[Double]]): Column = {
-    val native = org.apache.spark.sql.SparkSession.getActiveSession.exists { s =>
-      try s.catalog.functionExists(graft.functions.GraftExtensions.CellDistsName)
-      catch { case scala.util.control.NonFatal(_) => false }
-    }
-    if (native)
-      call_function(graft.functions.GraftExtensions.CellDistsName, v,
-        typedLit(centroids.map(_.toIndexedSeq).toIndexedSeq))
-    else array(centroids.toIndexedSeq.map(c => l2sq(v, c)): _*)
-  }
+      v: Column, centroids: Array[Array[Double]]): Column =
+    ColumnBridge.column(graft.functions.CellDists(ColumnBridge.expression(v),
+      ColumnBridge.expression(
+        typedLit(centroids.map(_.toIndexedSeq).toIndexedSeq))))
 
   // One broadcast per centroid MATRIX, not per expression construction:
   // iterative callers (Lloyd refinement, repeated probe queries) build

@@ -3,6 +3,7 @@ package graft.vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Embedding-similarity operators over an `array<float>` column:
   * brute-force cosine top-k (the exact baseline) and sign-LSH
@@ -23,25 +24,19 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** Ordered dot product of two float-array columns, computed in IEEE
-    * double exactly left-to-right (cross-engine reproducible). When the
-    * session registered [[graft.functions.GraftExtensions]], the native
-    * codegen'd [[graft.functions.DotProduct]] expression is used; the
-    * HOF composition is the extension-free fallback. Both produce
-    * bit-identical results (same widening, same summation order). */
+    * double exactly left-to-right (cross-engine reproducible): the
+    * native codegen'd [[graft.functions.DotProduct]] expression,
+    * bit-identical to [[hofDot]] (same widening, same summation
+    * order). */
   def dot(a: Column, b: Column): Column =
-    if (nativeDot) call_function(graft.functions.GraftExtensions.DotName, a, b)
-    else hofDot(a, b)
+    ColumnBridge.column(graft.functions.DotProduct(
+      ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** `aggregate`/`zip_with` dot product — builtin-only fallback. */
+  /** `aggregate`/`zip_with` dot product — the builtin-only reference
+    * [[dot]] is checked against. */
   def hofDot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
-
-  private def nativeDot: Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession.exists { s =>
-      try s.catalog.functionExists(graft.functions.GraftExtensions.DotName)
-      catch { case scala.util.control.NonFatal(_) => false }
-    }
 
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -244,34 +239,22 @@ object Similarity {
   /** Sign-LSH bit signature: bit j = [ dot(v, r_j) > 0 ] for `nBits`
     * deterministic hyperplanes r_j, as columns __b0..__b{n-1}.
     *
-    * With [[graft.functions.GraftExtensions]] registered the whole
-    * signature is ONE codegen'd `graft_sign_bits` bitmask call (the
-    * per-bit composition embeds nBits*dim literal nodes whose codegen
-    * compile time dominated the cold run; a `transform` over a 2-D
-    * literal is interpreted per row — measured 3x slower). The HOF
-    * fallback composes per-bit dots. Both produce identical bits. */
+    * The whole signature is ONE codegen'd `graft_sign_bits` bitmask
+    * call (a per-bit dot composition embeds nBits*dim literal nodes
+    * whose codegen compile time dominated the cold run; a `transform`
+    * over a 2-D literal is interpreted per row — measured 3x
+    * slower). */
   private def withSignBits(
       df: DataFrame, nBits: Int, dim: Int, idCol: String, vecCol: String): DataFrame = {
-    val native = org.apache.spark.sql.SparkSession.getActiveSession.exists { s =>
-      try s.catalog.functionExists(graft.functions.GraftExtensions.SignBitsName)
-      catch { case scala.util.control.NonFatal(_) => false }
-    }
-    if (native) {
-      val mat = typedLit(
-        (0 until nBits).map(j => (0 until dim).map(d => projWeight(j, d))))
-      val masked = df.select(col(idCol), col(vecCol).as("__v"),
-        call_function(graft.functions.GraftExtensions.SignBitsName,
-          col(vecCol), mat).as("__mask"))
-      val bits = (0 until nBits).map(j =>
-        shiftright(col("__mask"), j).bitwiseAND(lit(1L)).cast("int").as(s"__b$j"))
-      masked.select(col(idCol) +: col("__v") +: bits: _*)
-    } else {
-      val bits = (0 until nBits).map { j =>
-        val w = array((0 until dim).map(d => lit(projWeight(j, d))): _*)
-        (hofDot(col(vecCol), w) > 0.0).cast("int").as(s"__b$j")
-      }
-      df.select(col(idCol) +: col(vecCol).as("__v") +: bits: _*)
-    }
+    val mat = typedLit(
+      (0 until nBits).map(j => (0 until dim).map(d => projWeight(j, d))))
+    val masked = df.select(col(idCol), col(vecCol).as("__v"),
+      ColumnBridge.column(graft.functions.SignBits(
+        ColumnBridge.expression(col(vecCol)), ColumnBridge.expression(mat)))
+        .as("__mask"))
+    val bits = (0 until nBits).map(j =>
+      shiftright(col("__mask"), j).bitwiseAND(lit(1L)).cast("int").as(s"__b$j"))
+    masked.select(col(idCol) +: col("__v") +: bits: _*)
   }
 
   /** Band keys "b:bit:bit:..." over the __b* signature columns. */

@@ -819,6 +819,54 @@ class LayoutProbeSpec extends AnyFunSuite with SparkSpec {
       rows.agg(org.apache.spark.sql.functions.sum("v")).head.getLong(0))
   }
 
+  test("flat verbs resolve their one leaf on the driver — no discovery " +
+      "or snapshot job") {
+    import spark.implicits._
+    import graft.operators.Compact
+    val base = java.nio.file.Files.createTempDirectory("graft-fjob").toString
+    // the RDD names of every stage completed while `body` runs
+    def rddNames[T](body: => T): (T, Seq[String]) = {
+      val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onStageCompleted(
+            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+          e.stageInfo.rddInfos.foreach(r => names.add(r.name))
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val out = body
+        org.apache.spark.sql.graftbridge.ColumnBridge
+          .drainListenerBus(spark.sparkContext)
+        import scala.jdk.CollectionConverters._
+        (out, names.asScala.toList)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val plane = Set(Compact.LeafDirsRdd, Compact.LeafSnapshotRdd)
+    val t = s"$base/t"
+    val (_, appendRdds) = rddNames {
+      (0 until 3).foreach { b =>
+        Compact.appendManaged(spark, t,
+          (b * 100 until (b + 1) * 100).map(i => (i.toLong, i % 7L))
+            .toDF("id", "v").coalesce(1),
+          txn = Some(("w", b.toLong)), statsCols = Seq("id")): Unit
+      }
+    }
+    val (rep, packRdds) = rddNames(
+      Compact.binPackInPlace(spark, t, targetBytes = 1L << 26))
+    val (n, readRdds) = rddNames(Compact.read(spark, t).count())
+    assert(rep.nBinsRewritten === 1L && n === 300L)
+    Seq("appendManaged" -> appendRdds, "binPackInPlace" -> packRdds,
+        "read" -> readRdds).foreach { case (verb, names) =>
+      assert(names.nonEmpty, s"$verb ran no job at all")
+      assert(!names.exists(plane), s"flat $verb ran a metadata-plane job: " +
+        names.filter(plane).distinct)
+    }
+    // the control: the hive reader of the same directory does run them
+    val (_, partRdds) = rddNames(Compact.readPartitioned(spark, t))
+    assert(plane.subsetOf(partRdds.toSet),
+      s"partitioned reader ran no metadata-plane job: ${partRdds.distinct}")
+  }
+
   test("appendManagedPartitioned: per-leaf atomic appends, per-leaf txn " +
       "idempotence, partial-crash replay converges to exactly-once") {
     import spark.implicits._

@@ -50,6 +50,37 @@ class TextPipelineSpec extends AnyFunSuite with SparkSpec {
     assertClose(rows.head.getAs[Double]("jaccard"), 36.0 / 38.0)
   }
 
+  test("minHashNearDups recalls every planted J >= 0.9 pair at 16 bands of 4") {
+    // 1000 documents of 60-120 random words, each beside a near copy
+    // with one word changed: 3-shingle Jaccard >= 0.9. Independent
+    // hash functions miss such a pair with probability under
+    // (1 - 0.9^4)^16 < 1e-7, so every pair must come back; a dependent
+    // family (each hash a multiple of the first mod P) misses a few
+    // per thousand.
+    val rnd = new scala.util.Random(11)
+    val nPairs = 1000
+    val pairs = (0 until nPairs).map { i =>
+      val t = Vector.fill(60 + rnd.nextInt(61))(s"w${rnd.nextInt(5000)}")
+      (t, t.updated(rnd.nextInt(t.length), s"x$i"))
+    }
+    def shingles(t: Vector[String]) = t.sliding(3).map(_.mkString(" ")).toSet
+    pairs.foreach { case (t, u) =>
+      val (a, b) = (shingles(t), shingles(u))
+      assert((a & b).size.toDouble / (a | b).size >= 0.9, "fixture")
+    }
+    val d = pairs.zipWithIndex.flatMap { case ((t, u), i) =>
+      Seq((2L * i, t.mkString(" ")), (2L * i + 1L, u.mkString(" ")))
+    }.toDF("doc_id", "text")
+    val found = Dedup.minHashNearDups(d, n = 3, numHashes = 64, bands = 16,
+        minJaccard = 0.9)
+      .select("doc_a", "doc_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val missed = (0 until nPairs).map(i => (2L * i, 2L * i + 1L))
+      .filterNot(found)
+    assert(missed.isEmpty,
+      s"${missed.length} of $nPairs planted pairs missed: ${missed.take(5)}")
+  }
+
   test("duplicateClusters: min-label connected components over pairs") {
     import spark.implicits._
     // chain 1-2-3 plus isolated pair 10-11: two components

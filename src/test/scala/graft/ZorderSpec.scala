@@ -183,6 +183,68 @@ class ZorderSpec extends AnyFunSuite with SparkSpec {
     assert(got == want)
   }
 
+  /** A flat table written outside the append protocol, one file per
+    * name in name (= packing) order: a large `(id, a, b)` file, two
+    * small ones, and a small file with an `extra` column last — so the
+    * first rewritten file lacks the column. */
+  private def driftedTable(dir: String): Unit = {
+    import spark.implicits._
+    val scratch = Files.createTempDirectory("graft-drift-src").toString
+    def put(df: DataFrame, name: String): Unit = {
+      df.coalesce(1).write.parquet(s"$scratch/$name")
+      val part = new java.io.File(s"$scratch/$name").listFiles()
+        .filter(_.getName.startsWith("part-")).head
+      new java.io.File(dir).mkdirs()
+      Files.copy(part.toPath, new java.io.File(s"$dir/$name.parquet").toPath)
+    }
+    def rows(lo: Int, hi: Int) = (lo until hi)
+      .map(i => (i.toLong, (i * 37 % 101).toLong, (i * 53 % 97).toLong))
+    put(rows(0, 60000).toDF("id", "a", "b"), "part-00000-big")
+    put(rows(60000, 60100).toDF("id", "a", "b"), "part-00001-s1")
+    put(rows(60100, 60200).toDF("id", "a", "b"), "part-00002-s2")
+    put((60200 until 60300).map(i => (i.toLong, (i * 37 % 101).toLong,
+      (i * 53 % 97).toLong, s"x$i")).toDF("id", "a", "b", "extra"),
+      "part-00003-extra")
+  }
+
+  private def assertExtraKept(back: DataFrame): Unit = {
+    assert(back.columns.contains("extra"),
+      "the drifted file's extra column was dropped by the rewrite")
+    assert(back.count() === 60300L)
+    val extra = back.filter(col("extra").isNotNull).select("id", "extra")
+      .collect().map(r => r.getLong(0) -> r.getString(1))
+    assert(extra.length === 100 &&
+      extra.forall { case (id, e) => id >= 60200L && e == s"x$id" })
+  }
+
+  test("flat rewrites keep the columns of a drifted file") {
+    import graft.operators.Compact
+    val base = Files.createTempDirectory("graft-fdrift").toString
+    driftedTable(s"$base/t")
+    val big = new java.io.File(s"$base/t/part-00000-big.parquet").length()
+
+    // in place: the big file stays untouched, the three small ones pack
+    // into one file on the merged schema, and the table is flagged
+    // #merge because the untouched file still lacks the column
+    val rep = Compact.binPackInPlace(spark, s"$base/t",
+      targetBytes = 1L << 26, smallBytes = big)
+    assert(rep.nFilesUntouched === 1L && rep.nBinsRewritten === 1L &&
+      rep.nFilesAfter === 2L)
+    assertExtraKept(Compact.read(spark, s"$base/t"))
+    assert(Compact.tableState(spark, s"$base/t").get.merge)
+
+    // into a new directory, and re-clustered in place
+    driftedTable(s"$base/u")
+    Compact.binPack(spark, s"$base/u", s"$base/u2", targetBytes = 1L << 26,
+      smallBytes = big)
+    assertExtraKept(spark.read.option("mergeSchema", "true")
+      .parquet(s"$base/u2"))
+    Compact.optimizeZorder(spark, s"$base/u", Seq("a", "b"),
+      targetBytes = 1L << 26, bits = 8)
+    assert(!Compact.tableState(spark, s"$base/u").get.merge)
+    assertExtraKept(Compact.read(spark, s"$base/u"))
+  }
+
   test("optimizeZorderPartitioned keeps the columns of a drifted leaf") {
     import spark.implicits._
     import graft.operators.Compact
