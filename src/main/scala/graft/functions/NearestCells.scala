@@ -2,12 +2,13 @@ package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, StructField, StructType}
 
 /** Scalar arithmetic shared by [[SnapGrid]], [[NearestCell]] and
   * [[NearestCells]]. Interpreted eval and generated code both call
@@ -90,6 +91,16 @@ object CellKernels {
     }
     best
   }
+
+  /** [[argmin]] with the distance to the chosen centroid, as a
+    * (cell, dist) struct row; (-1, NaN) for an empty matrix. */
+  def nearestWithDist(x: Array[Double], mat: Array[Array[Double]]): InternalRow = {
+    val j = argmin(x, mat)
+    cellDist(j, if (j < 0) Double.NaN else dist(x, mat(j)))
+  }
+
+  def cellDist(cell: Int, dist: Double): InternalRow =
+    new GenericInternalRow(Array[Any](cell, dist))
 
   /** The `n` nearest centroid indices ordered by (distance, index) —
     * the order of `array_sort(arrays_zip(d, cell))` — kept by bounded
@@ -248,6 +259,33 @@ case class NearestCell(
     copy(child = newChild)
 
   override def prettyName: String = "graft_nearest_cell"
+}
+
+/** `graft_nearest_cell_dist`: the nearest centroid and the squared
+  * distance to it as struct<cell: int, dist: double>, ties to the lower
+  * index — the argmin and the minimum of the full distance array,
+  * without the array. (-1, NaN) for a null vector. */
+case class NearestCellDist(
+    child: Expression,
+    bc: Broadcast[Array[Array[Double]]],
+    snapIt: Boolean)
+    extends CellKernel {
+
+  override def dataType: DataType = StructType(Seq(
+    StructField("cell", IntegerType, nullable = false),
+    StructField("dist", DoubleType, nullable = false)))
+
+  protected def select(x: Array[Double]): Any = CellKernels.nearestWithDist(x, matrix)
+  protected def selectCode(x: String, mat: String): String =
+    s"graft.functions.CellKernels.nearestWithDist($x, $mat)"
+  protected def nullResult: Any = CellKernels.cellDist(-1, Double.NaN)
+  protected def nullResultCode: String =
+    "graft.functions.CellKernels.cellDist(-1, java.lang.Double.NaN)"
+
+  override protected def withNewChildInternal(newChild: Expression): NearestCellDist =
+    copy(child = newChild)
+
+  override def prettyName: String = "graft_nearest_cell_dist"
 }
 
 /** `graft_nearest_cells`: the `n` nearest centroid indices ordered by

@@ -24,10 +24,11 @@ final case class FactorData(
   * equi-join on (date, asset)) -> broadcast group join -> drop incomplete
   * rows -> quantize -> drop unbinned rows -> 3-stage max-loss accounting.
   *
-  * Scale notes: the merged panel is persisted before the two row counts so
-  * the loss accounting does not recompute the join+window DAG; the group
-  * map is a broadcast join (25-ish groups); the only shuffles are the
-  * (date, asset) join and the per-date quantize window.
+  * Scale notes: only the quantized panel is persisted, clustered by date
+  * (the layout every per-date consumer reads without an exchange), and
+  * one aggregate over it gives both loss counts; the group map is a
+  * broadcast join (25-ish groups); the only shuffles are the (date,
+  * asset) join and the quantizer's repartition by date.
   */
 object CleanFactor {
 
@@ -102,17 +103,18 @@ object CleanFactor {
     }
 
     merged = merged.na.drop()
-    merged.persist(StorageLevel.MEMORY_AND_DISK)
-    val fwdretAmount = merged.count().toDouble
 
     val noRaise = maxLoss != 0.0
     val quantized = Quantize.quantizeFactor(
       merged, spec, byGroup = binningByGroup, noRaise = noRaise, zeroAware = zeroAware)
-
-    val out = quantized.na.drop(Seq("factor_quantile"))
-    out.persist(StorageLevel.MEMORY_AND_DISK)
-    val binningAmount = out.count().toDouble
-    merged.unpersist()
+    quantized.persist(StorageLevel.MEMORY_AND_DISK)
+    // both loss stages from ONE aggregate over the persisted panel:
+    // quantizing adds a column and drops no row, so its row count is
+    // the merged count, and its non-null quantiles are the binned rows
+    val counts = quantized.agg(count(lit(1)), count(col("factor_quantile"))).first()
+    val fwdretAmount = counts.getLong(0).toDouble
+    val binningAmount = counts.getLong(1).toDouble
+    val out = quantized.filter(col("factor_quantile").isNotNull)
 
     val totLoss = (initialAmount - binningAmount) / initialAmount
     val fwdretLoss = (initialAmount - fwdretAmount) / initialAmount

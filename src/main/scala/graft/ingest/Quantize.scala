@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * over the cross-section partition (date [, group] [, sign]); the bucket
   * id is a right-closed, include-lowest comparison ladder against the
   * edges array. Everything stays inside whole-stage-codegen'd expressions
-  * over a single window exchange per partition spec; nothing is collected
+  * over a single exchange, the repartition by date; nothing is collected
   * to the driver, so cross-sections of any width distribute across
   * executors by date.
   *
@@ -77,7 +77,12 @@ object Quantize {
         when(sign, local + lit(half)).otherwise(local)
       }
 
-    factorData.withColumn("factor_quantile", bucket.cast("int"))
+    // the explicit repartition by date IS the window's exchange (every
+    // spec above partitions by date first) and survives persist, so the
+    // quantized panel stays date-clustered: per-date windows and
+    // (date, quantile) aggregates over it plan no further exchange
+    factorData.repartition(col("date"))
+      .withColumn("factor_quantile", bucket.cast("int"))
   }
 
   /** The bucket expression for one (window, spec) combination. */

@@ -38,4 +38,20 @@ object Cumulative {
     val onePlus = coalesce(col(valueCol), lit(0.0)) + 1.0
     returns.withColumn(s"cum_$valueCol", runningProduct(onePlus, w))
   }
+
+  /** [[cumulativeReturns]] of one date-ordered series held on the
+    * driver: the same operations in the same order, with the StrictMath
+    * log and exp Spark evaluates, so both paths agree bitwise. */
+  def cumulative(returns: Seq[Option[Double]]): Seq[Double] = {
+    var logAbs = 0.0
+    var negCnt = 0L
+    var anyZero = false
+    returns.map { r =>
+      val c = r.getOrElse(0.0) + 1.0
+      logAbs += (if (c != 0.0) StrictMath.log(math.abs(c)) else 0.0)
+      if (c < 0.0) negCnt += 1
+      if (c == 0.0) anyZero = true
+      if (anyZero) 0.0 else StrictMath.exp(logAbs) * (if (negCnt % 2 == 1) -1.0 else 1.0)
+    }
+  }
 }

@@ -1,10 +1,12 @@
 package graft.perf
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField}
 
 import graft.ingest.FactorData
+import graft.perf.PanelPasses.{box, opt}
 
 /** Rank-correlation information analysis
   * (reference: alphalens/performance.py:28-126). */
@@ -83,19 +85,28 @@ object Information {
   def factorInformationCoefficient(
       fd: FactorData,
       groupAdjust: Boolean = false,
+      byGroup: Boolean = false): DataFrame =
+    icFrame(fd, groupAdjust, byGroup)
+      .orderBy((Seq("date") ++ (if (byGroup) Seq("group") else Nil)).map(col): _*)
+
+  /** [[factorInformationCoefficient]] unordered: the tear sheets' IC
+    * pass. */
+  private[graft] def icFrame(
+      fd: FactorData,
+      groupAdjust: Boolean,
       byGroup: Boolean = false): DataFrame = {
     val base = if (groupAdjust) demeanForwardReturns(fd, byGroup = true) else fd.df
     val keyCols: Seq[String] = "date" +: (if (byGroup) Seq("group") else Nil)
-    icFromRanked(fd, rankedPanel(fd, base, keyCols), keyCols)
+    exactRankCorr(rankedPanel(fd, base, keyCols), keyCols, "__rf",
+      fd.returnCols.map(rc => s"__rr_$rc" -> rc))
   }
 
   /** The per-date doubled-integer rank columns the IC series and the
-    * rank-autocorrelation both start from: `__rf` (factor rank) and
+    * rank autocorrelation both start from: `__rf` (factor rank) and
     * `__rr_<horizon>` (forward-return ranks), one window sort per
-    * column. The summary tear sheet computes this ONCE (persisted,
-    * panel-sized — the one panel-scale cache a sheet owns, released by
-    * its unpersist hook) and derives both series from it instead of
-    * re-running the factor-rank window per component. */
+    * column within each date partition of the date-clustered panel.
+    * A consumer that selects only `__rf` (the autocorrelation) gets the
+    * other windows pruned. */
   private[graft] def rankedPanel(
       fd: FactorData,
       base: DataFrame,
@@ -106,16 +117,6 @@ object Information {
       (df, rc) => df.withColumn(s"__rr_$rc", rank2(col(rc), part))
     }
   }
-
-  /** [[factorInformationCoefficient]] over a precomputed (ideally
-    * persisted) [[rankedPanel]]. */
-  private[graft] def icFromRanked(
-      fd: FactorData,
-      ranked: DataFrame,
-      keyCols: Seq[String] = Seq("date")): DataFrame =
-    exactRankCorr(ranked, keyCols, "__rf",
-      fd.returnCols.map(rc => s"__rr_$rc" -> rc))
-      .orderBy(keyCols.map(col): _*)
 
   /** Time bucket column for a pandas resample rule subset: "M" labels the
     * month end, "W" the week-ending Sunday, "D" the day
@@ -139,62 +140,75 @@ object Information {
       groupAdjust: Boolean = false,
       byGroup: Boolean = false,
       byTime: Option[String] = None): DataFrame =
-    meanIcFrom(fd, factorInformationCoefficient(fd, groupAdjust, byGroup),
-      byGroup, byTime)
+    meanIcTable(new PanelPasses(fd), groupAdjust, byGroup, byTime)
 
-  /** [[meanInformationCoefficient]] over a precomputed (ideally
-    * persisted) per-date IC table — the tear-sheet composites compute
-    * the rank-window IC series once and derive every mean from it. */
-  private[graft] def meanIcFrom(
-      fd: FactorData,
-      ic: DataFrame,
-      byGroup: Boolean = false,
-      byTime: Option[String] = None): DataFrame = {
-    val keys: Seq[(String, Column)] =
-      byTime.map(r => "date" -> timeBucket(r)).toSeq ++
-      (if (byGroup) Seq("group" -> col("group")) else Nil)
-    val aggs = fd.returnCols.map(rc => avg(col(rc)).as(rc))
-    if (keys.isEmpty) ic.agg(aggs.head, aggs.tail: _*)
-    else {
-      val keyed = keys.foldLeft(ic) { case (df, (n, c)) => df.withColumn(n, c) }
-      keyed.groupBy(keys.map(k => col(k._1)): _*).agg(aggs.head, aggs.tail: _*)
-        .orderBy(keys.map(k => col(k._1)): _*)
+  /** [[meanInformationCoefficient]] from the IC passes: each bucket's
+    * mean over its dates in order. */
+  private[graft] def meanIcTable(
+      p: PanelPasses,
+      groupAdjust: Boolean,
+      byGroup: Boolean,
+      byTime: Option[String]): DataFrame = {
+    val n = p.fd.returnCols.size
+    val (rows, nKeys) =
+      if (byGroup) (p.icByGroup(groupAdjust), 2) else (p.ic(groupAdjust), 1)
+    // the date -> bucket map is a projection over a local frame of the
+    // distinct dates: Spark's own calendar functions, and no job
+    val bucket = byTime.map { rule =>
+      val dates = PanelPasses.local(p.spark, Seq(p.field("date")),
+        rows.map(_.get(0)).distinct.toSeq.map(Row(_)))
+        .select(col("date"), timeBucket(rule).as("__b"))
+      (StructField("date", dates.schema("__b").dataType),
+        dates.collect().map(r => r.get(0) -> r.get(1)).toMap)
     }
+    val keyFields = bucket.map(_._1).toSeq ++
+      (if (byGroup) Seq(p.field("group")) else Nil)
+    def key(r: Row): Seq[Any] =
+      bucket.map(_._2(r.get(0))).toSeq ++ (if (byGroup) Seq(r.get(1)) else Nil)
+    val groups =
+      if (keyFields.isEmpty) Seq(Seq.empty[Any] -> rows.toSeq)
+      else rows.toSeq.groupBy(key).toSeq.sortWith((a, b) => PanelPasses.seqLess(a._1, b._1))
+    PanelPasses.local(p.spark,
+      keyFields ++ p.fd.returnCols.map(StructField(_, DoubleType)),
+      groups.map { case (k, rs) =>
+        Row.fromSeq(k ++ (0 until n).map(i =>
+          box(StatFunctions.mean(rs.flatMap(opt(_, nKeys + i))))))
+      })
   }
 
   /** IC summary statistics per horizon: mean, std, IR, t-stat, p-value,
     * skew, kurtosis (reference: alphalens/plotting.py:166-179). One row
     * per horizon; p-value via the regularized incomplete beta (exact
-    * Student-t two-sided), computed in-plan with codegen'd arithmetic on
-    * the tiny aggregated row. */
+    * Student-t two-sided). */
   def icSummary(fd: FactorData, groupAdjust: Boolean = false): DataFrame =
-    icSummaryFrom(fd, factorInformationCoefficient(fd, groupAdjust))
+    icSummaryTable(new PanelPasses(fd), groupAdjust)
 
-  /** [[icSummary]] over a precomputed (ideally persisted) per-date IC
-    * table: the per-horizon aggregate rows all read one cached series
-    * instead of re-running the rank windows per horizon. */
-  private[graft] def icSummaryFrom(fd: FactorData, ic: DataFrame): DataFrame = {
-    val perH = fd.returnCols.map { rc =>
-      val c = col(rc)
-      ic.agg(
-        lit(rc).as("period"),
-        avg(c).as("ic_mean"),
-        stddev_samp(c).as("ic_std"),
-        (avg(c) / stddev_samp(c)).as("risk_adjusted_ic"),
-        count(c).as("n"),
-        skewness(c).as("ic_skew"),
-        kurtosis(c).as("ic_kurtosis"))
+  /** [[icSummary]] from the IC pass. */
+  private[graft] def icSummaryTable(p: PanelPasses, groupAdjust: Boolean): DataFrame = {
+    val ic = p.ic(groupAdjust)
+    val rows = p.fd.returnCols.zipWithIndex.map { case (rc, i) =>
+      val xs = ic.toSeq.flatMap(opt(_, 1 + i))
+      val mean = StatFunctions.mean(xs)
+      val std = StatFunctions.stddevSamp(xs)
+      val n = xs.length.toLong
+      val t = StatFunctions.div(mean, std.map(_ / math.sqrt(n.toDouble)))
+      val pValue = t.map(t =>
+        if (n < 2 || t.isNaN) Double.NaN
+        else StatFunctions.tTwoSidedPValue(t, (n - 1).toDouble))
+      Row(rc, box(mean), box(std), box(StatFunctions.div(mean, std)), box(t),
+        box(pValue), box(StatFunctions.skewness(xs)), box(StatFunctions.kurtosis(xs)), n)
     }
-    val stats = perH.reduce(_.unionAll(_))
-      .withColumn("t_stat", col("ic_mean") / (col("ic_std") / sqrt(col("n"))))
-    // two-sided p-value driver-free would need a t-CDF expression; the
-    // result table is one row per horizon, so evaluate via a deterministic
-    // UDF over commons-math-free continued-fraction betainc.
-    val pval = udf((t: Double, n: Long) =>
-      if (n < 2 || t.isNaN) Double.NaN
-      else graft.perf.StatFunctions.tTwoSidedPValue(t, (n - 1).toDouble))
-    stats.withColumn("p_value", pval(col("t_stat"), col("n")))
-      .select("period", "ic_mean", "ic_std", "risk_adjusted_ic", "t_stat",
-        "p_value", "ic_skew", "ic_kurtosis", "n")
+    PanelPasses.local(p.spark,
+      StructField("period", StringType) +:
+        Seq("ic_mean", "ic_std", "risk_adjusted_ic", "t_stat", "p_value",
+          "ic_skew", "ic_kurtosis").map(StructField(_, DoubleType)) :+
+        StructField("n", LongType),
+      rows)
   }
+
+  /** The IC series of a sheet as a (date, horizons...) table. */
+  private[graft] def icTable(p: PanelPasses, groupAdjust: Boolean): DataFrame =
+    PanelPasses.local(p.spark,
+      p.field("date") +: p.fd.returnCols.map(StructField(_, DoubleType)),
+      p.ic(groupAdjust).toSeq)
 }

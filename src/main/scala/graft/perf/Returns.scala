@@ -1,10 +1,12 @@
 package graft.perf
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField}
 
 import graft.ingest.FactorData
+import graft.perf.PanelPasses.{box, opt}
 
 /** Weighting and return attribution
   * (reference: alphalens/performance.py:129-330, 453-565). */
@@ -66,71 +68,115 @@ object Returns {
       groupAdjust: Boolean = false,
       equalWeight: Boolean = false,
       byAsset: Boolean = false): DataFrame = {
-    val weighted = factorWeights(fd, demeaned, groupAdjust, equalWeight)
-    val cols = fd.returnCols.map(rc => (col(rc) * col("weight")).as(rc))
-    if (byAsset)
-      weighted.select((Seq(col("date"), col("asset")) ++ cols): _*)
-    else {
-      // CANONICAL-ORDER fold, not sum(): a float sum's low bits depend
-      // on summation order, and when a per-date sum lands within an ulp
-      // of a .5e-9 boundary the final round(_, 9) flips with the order
-      // — across partitionings here, across thread schedules in the
-      // DuckDB twin (the 9x panel probe caught exactly one such date:
-      // SURVEY §5 probe #12). Folding the per-asset contributions in
-      // asset order makes the value a function of the DATA alone; the
-      // oracle folds the identical sequence via list_reduce. The
-      // per-date state is one struct array bounded by the universe
-      // width (the positions-grid precedent), combinable map-side by
-      // collect_list.
-      // sum() semantics preserved exactly: nulls are skipped (possible
-      // under equal-weight on a degenerate date) and an all-null group
-      // yields null — tracked in the fold state, one pass
-      val aggs = fd.returnCols.map { rc =>
-        val arr = filter(
-          array_sort(collect_list(struct(col("asset").as("a"),
-            (col(rc) * col("weight")).as("x")))),
-          s => s.getField("x").isNotNull)
-        aggregate(arr,
-          struct(lit(0.0).as("s"), lit(0L).as("n")),
-          (acc, e) => struct(
-            (acc.getField("s") + e.getField("x")).as("s"),
-            (acc.getField("n") + 1L).as("n")),
-          acc => when(acc.getField("n") > 0, acc.getField("s"))).as(rc)
-      }
-      weighted.groupBy("date").agg(aggs.head, aggs.tail: _*).orderBy("date")
-    }
+    if (byAsset) {
+      val weighted = factorWeights(fd, demeaned, groupAdjust, equalWeight)
+      weighted.select((Seq(col("date"), col("asset")) ++
+        fd.returnCols.map(rc => (col(rc) * col("weight")).as(rc))): _*)
+    } else factorReturnsByDate(fd, demeaned, groupAdjust, equalWeight).orderBy("date")
   }
+
+  /** [[factorReturns]] per date, unordered: the tear sheets' weighted
+    * factor-returns pass. */
+  private[graft] def factorReturnsByDate(
+      fd: FactorData,
+      demeaned: Boolean,
+      groupAdjust: Boolean,
+      equalWeight: Boolean): DataFrame = {
+    val weighted = factorWeights(fd, demeaned, groupAdjust, equalWeight)
+    // CANONICAL-ORDER fold, not sum(): a float sum's low bits depend
+    // on summation order, and when a per-date sum lands within an ulp
+    // of a .5e-9 boundary the final round(_, 9) flips with the order
+    // — across partitionings here, across thread schedules in the
+    // DuckDB twin (the 9x panel probe caught exactly one such date:
+    // SURVEY §5 probe #12). Folding the per-asset contributions in
+    // asset order makes the value a function of the DATA alone; the
+    // oracle folds the identical sequence via list_reduce. The
+    // per-date state is one struct array bounded by the universe
+    // width (the positions-grid precedent), combinable map-side by
+    // collect_list.
+    // sum() semantics preserved exactly: nulls are skipped (possible
+    // under equal-weight on a degenerate date) and an all-null group
+    // yields null — tracked in the fold state, one pass
+    val aggs = fd.returnCols.map { rc =>
+      val arr = filter(
+        array_sort(collect_list(struct(col("asset").as("a"),
+          (col(rc) * col("weight")).as("x")))),
+        s => s.getField("x").isNotNull)
+      aggregate(arr,
+        struct(lit(0.0).as("s"), lit(0L).as("n")),
+        (acc, e) => struct(
+          (acc.getField("s") + e.getField("x")).as("s"),
+          (acc.getField("n") + 1L).as("n")),
+        acc => when(acc.getField("n") > 0, acc.getField("s"))).as(rc)
+    }
+    weighted.groupBy("date").agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The weighted factor returns of a sheet as a (date, horizons...)
+    * table. */
+  private[graft] def factorReturnsTable(
+      p: PanelPasses, demeaned: Boolean, groupAdjust: Boolean): DataFrame =
+    PanelPasses.local(p.spark,
+      p.field("date") +: p.fd.returnCols.map(StructField(_, DoubleType)),
+      p.factorReturns(demeaned, groupAdjust).toSeq)
 
   /** Closed-form OLS alpha/beta of factor returns on the period-wise
     * universe mean return (reference: alphalens/performance.py:258-330).
     * beta = cov(x,y)/var(x); Ann. alpha = (1+a)^(252D/period) - 1.
-    * Output: rows "Ann. alpha" and "beta", one column per horizon. */
+    * Output: rows "Ann. alpha" and "beta", one column per horizon.
+    * `returns`, when given, is a (date, horizons...) table. */
   def factorAlphaBeta(
       fd: FactorData,
       returns: Option[DataFrame] = None,
       demeaned: Boolean = true,
       groupAdjust: Boolean = false,
       equalWeight: Boolean = false): DataFrame = {
-    val rets = returns.getOrElse(factorReturns(fd, demeaned, groupAdjust, equalWeight))
-    val uniAggs = fd.returnCols.map(rc => avg(col(rc)).as(s"__u_$rc"))
-    val universe = fd.df.groupBy("date").agg(uniAggs.head, uniAggs.tail: _*)
-    val joined = rets.join(universe, Seq("date"), "inner")
-
-    val aggs = fd.horizons.flatMap { h =>
-      val x = col(s"__u_${h.label}"); val y = col(h.label)
-      val beta = covar_samp(x, y) / var_samp(x)
-      val alpha = avg(y) - beta * avg(x)
-      Seq(
-        (pow(alpha + 1.0, lit(h.freqAdjust)) - 1.0).as(s"__a_${h.label}"),
-        beta.as(s"__b_${h.label}"))
-    }
-    val one = joined.agg(aggs.head, aggs.tail: _*)
-    val alphaRow = one.select((lit("Ann. alpha").as("stat") +:
-      fd.returnCols.map(rc => col(s"__a_$rc").as(rc))): _*)
-    val betaRow = one.select((lit("beta").as("stat") +:
-      fd.returnCols.map(rc => col(s"__b_$rc").as(rc))): _*)
-    alphaRow.unionAll(betaRow)
+    val p = new PanelPasses(fd)
+    val rets = returns
+      .map(_.select(("date" +: fd.returnCols).map(col): _*).collect())
+      .getOrElse(p.factorReturns(demeaned, groupAdjust, equalWeight))
+    statTable(p, alphaBetaRows(p, rets, demeaned, groupAdjust))
   }
+
+  /** Alpha/beta rows from (date, horizons...) factor returns and the
+    * per-date universe means, inner-joined on date. */
+  private[graft] def alphaBetaRows(
+      p: PanelPasses,
+      returns: Seq[Row],
+      demeaned: Boolean,
+      groupAdjust: Boolean): Seq[(String, IndexedSeq[Option[Double]])] = {
+    val universe = p.universe(demeaned, groupAdjust)
+    val joined = returns.flatMap(r => universe.get(r.get(0)).map(u => (u, r)))
+    val perH = p.fd.horizons.zipWithIndex.map { case (h, i) =>
+      val pairs = joined.map { case (u, r) => (u(i), opt(r, 1 + i)) }
+      val xs = pairs.flatMap(_._1)
+      val beta = StatFunctions.div(
+        StatFunctions.covarSamp(pairs.collect { case (Some(x), Some(y)) => (x, y) }),
+        StatFunctions.varSamp(xs))
+      val alpha = for {
+        ay <- StatFunctions.mean(pairs.flatMap(_._2))
+        b <- beta
+        ax <- StatFunctions.mean(xs)
+      } yield ay - b * ax
+      (alpha.map(a => StrictMath.pow(a + 1.0, h.freqAdjust) - 1.0), beta)
+    }
+    Seq("Ann. alpha" -> perH.map(_._1).toIndexedSeq,
+      "beta" -> perH.map(_._2).toIndexedSeq)
+  }
+
+  /** A (stat, horizons...) table. */
+  private[graft] def statTable(
+      p: PanelPasses, rows: Seq[(String, IndexedSeq[Option[Double]])]): DataFrame =
+    PanelPasses.local(p.spark,
+      StructField("stat", StringType) +: p.fd.returnCols.map(StructField(_, DoubleType)),
+      rows.map { case (stat, vs) => Row.fromSeq(stat +: vs.map(box)) })
+
+  /** One row of a mean-return table: its key values, then per horizon
+    * the mean and its standard error. */
+  private[graft] final case class MeanRow(
+      keys: Seq[Any],
+      mean: IndexedSeq[Option[Double]],
+      err: IndexedSeq[Option[Double]])
 
   /** Mean period-wise returns by factor quantile, with the reference's
     * two-stage estimator when by_date=False: the overall quantile mean is
@@ -144,61 +190,118 @@ object Returns {
       byDate: Boolean = false,
       byGroup: Boolean = false,
       demeaned: Boolean = true,
-      groupAdjust: Boolean = false): DataFrame =
-    meanReturnFromStage1(fd,
-      meanReturnsStage1(fd, byGroup, demeaned, groupAdjust), byDate, byGroup)
-
-  /** First-stage estimator shared by both `by_date` variants: per
-    * (factor_quantile, date[, group]) mean/std/count per horizon over
-    * the (optionally demeaned) panel. Exposed so the tear-sheet
-    * composites can compute this one panel-wide aggregate ONCE, persist
-    * its bounded output (quantiles × dates rows), and derive every
-    * downstream table — by-date means, overall two-stage means,
-    * spread, cumulative curves — without re-scanning the panel per
-    * component. */
-  private[graft] def meanReturnsStage1(
-      fd: FactorData,
-      byGroup: Boolean = false,
-      demeaned: Boolean = true,
       groupAdjust: Boolean = false): DataFrame = {
+    val p = new PanelPasses(fd)
+    meanTable(p.spark, meanKeys(byDate, byGroup).map(p.field), fd.returnCols,
+      meanRows(p, byDate, byGroup, demeaned, groupAdjust))
+  }
+
+  private[graft] def meanKeys(byDate: Boolean, byGroup: Boolean): Seq[String] =
+    "factor_quantile" +: ((if (byDate) Seq("date") else Nil) ++
+      (if (byGroup) Seq("group") else Nil))
+
+  /** First stage of the estimator: per (factor_quantile, date) mean,
+    * std and count of each horizon's (optionally demeaned) return, plus
+    * the date's universe mean per horizon, which alpha/beta regresses
+    * on — one pass over the panel. */
+  private[graft] def stage1Frame(
+      fd: FactorData,
+      demeaned: Boolean,
+      groupAdjust: Boolean): DataFrame = {
+    val byDate = Window.partitionBy("date")
+    val withU = fd.returnCols.foldLeft(fd.df) { (df, rc) =>
+      df.withColumn(s"__u_$rc", avg(col(rc)).over(byDate))
+    }
+    val base =
+      if (groupAdjust) Information.demeanForwardReturns(fd.copy(df = withU), byGroup = true)
+      else if (demeaned)
+        fd.returnCols.foldLeft(withU)((df, rc) => df.withColumn(rc, col(rc) - col(s"__u_$rc")))
+      else withU
+    val aggs = moments(fd) ++ fd.returnCols.map(rc => first(col(s"__u_$rc")))
+    base.groupBy("factor_quantile", "date").agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The by-group estimator, kept in Spark: per (factor_quantile,
+    * date, group) moments, and when `!byDate` the second stage per
+    * (factor_quantile, group) over them. Only that result is
+    * collected. */
+  private[graft] def groupMomentsFrame(
+      fd: FactorData,
+      byDate: Boolean,
+      demeaned: Boolean,
+      groupAdjust: Boolean): DataFrame = {
     val base =
       if (groupAdjust) Information.demeanForwardReturns(fd, byGroup = true)
       else if (demeaned) Information.demeanForwardReturns(fd)
       else fd.df
-    val keys1 = Seq("factor_quantile", "date") ++ (if (byGroup) Seq("group") else Nil)
-    val aggs1 = fd.returnCols.flatMap { rc =>
-      Seq(avg(col(rc)).as(rc),
-        stddev_samp(col(rc)).as(s"__std_$rc"),
-        count(col(rc)).as(s"__cnt_$rc"))
-    }
-    base.groupBy(keys1.map(col): _*).agg(aggs1.head, aggs1.tail: _*)
+    val keys = meanKeys(byDate = true, byGroup = true)
+    val stage1 = base.groupBy(keys.map(col): _*).agg(moments(fd).head, moments(fd).tail: _*)
+    if (byDate) stage1
+    else stage1.groupBy("factor_quantile", "group")
+      .agg(moments(fd).head, moments(fd).tail: _*)
   }
 
-  /** Second half of [[meanReturnByQuantile]] over a precomputed
-    * [[meanReturnsStage1]] table (same flags). */
-  private[graft] def meanReturnFromStage1(
-      fd: FactorData,
-      stage1: DataFrame,
-      byDate: Boolean = false,
-      byGroup: Boolean = false): DataFrame = {
-    val keys1 = Seq("factor_quantile", "date") ++ (if (byGroup) Seq("group") else Nil)
-    val (stats, keys) =
-      if (byDate) (stage1, keys1)
-      else {
-        val keys2 = "factor_quantile" +: (if (byGroup) Seq("group") else Nil)
-        val aggs2 = fd.returnCols.flatMap { rc =>
-          Seq(avg(col(rc)).as(rc),
-            stddev_samp(col(rc)).as(s"__std_$rc"),
-            count(col(rc)).as(s"__cnt_$rc"))
-        }
-        (stage1.groupBy(keys2.map(col): _*).agg(aggs2.head, aggs2.tail: _*), keys2)
-      }
+  /** mean, std and count of each horizon column. */
+  private def moments(fd: FactorData): Seq[Column] =
+    fd.returnCols.flatMap(rc => Seq(avg(col(rc)).as(rc),
+      stddev_samp(col(rc)).as(s"__std_$rc"), count(col(rc)).as(s"__cnt_$rc")))
 
-    val outCols = keys.map(col) ++ fd.returnCols.flatMap { rc =>
-      Seq(col(rc),
-        (col(s"__std_$rc") / sqrt(col(s"__cnt_$rc"))).as(s"${rc}_std_err"))
+  /** The rows of [[meanReturnByQuantile]] from the shared passes. */
+  private[graft] def meanRows(
+      p: PanelPasses,
+      byDate: Boolean,
+      byGroup: Boolean,
+      demeaned: Boolean,
+      groupAdjust: Boolean): Seq[MeanRow] = {
+    val n = p.fd.horizons.size
+    def stdErr(std: Option[Double], cnt: Long): Option[Double] =
+      std.map(_ / math.sqrt(cnt.toDouble))
+    def fromMoments(r: Row, nKeys: Int): MeanRow = MeanRow(
+      (0 until nKeys).map(r.get),
+      (0 until n).map(i => opt(r, nKeys + 3 * i)),
+      (0 until n).map(i => stdErr(opt(r, nKeys + 3 * i + 1), r.getLong(nKeys + 3 * i + 2))))
+    if (byGroup)
+      p.groupMoments(byDate, demeaned, groupAdjust).toSeq
+        .map(fromMoments(_, if (byDate) 3 else 2))
+    else if (byDate)
+      p.stage1(demeaned, groupAdjust).toSeq.map(fromMoments(_, 2))
+    else {
+      // second stage on the driver, over the date-ordered daily means
+      val byQ = p.stage1(demeaned, groupAdjust).toSeq.groupBy(_.get(0))
+      byQ.keys.toSeq.sortWith(PanelPasses.compareKeys(_, _) < 0).map { q =>
+        val daily = (0 until n).map(i => byQ(q).flatMap(opt(_, 2 + 3 * i)))
+        MeanRow(Seq(q), daily.map(StatFunctions.mean),
+          daily.map(xs => stdErr(StatFunctions.stddevSamp(xs), xs.length)))
+      }
     }
-    stats.select(outCols: _*).orderBy(keys.map(col): _*)
+  }
+
+  /** A mean-return table: key columns, then per horizon `<label>` and
+    * `<label>_std_err`. */
+  private[graft] def meanTable(
+      spark: SparkSession,
+      keys: Seq[StructField],
+      returnCols: Seq[String],
+      rows: Seq[MeanRow]): DataFrame =
+    PanelPasses.local(spark,
+      keys ++ returnCols.flatMap(rc =>
+        Seq(StructField(rc, DoubleType), StructField(s"${rc}_std_err", DoubleType))),
+      rows.map(r => Row.fromSeq(r.keys ++
+        r.mean.zip(r.err).flatMap { case (m, e) => Seq(box(m), box(e)) })))
+
+  /** Every horizon's means (and optionally std errors) converted to the
+    * base (first) horizon's rate, as the tear sheets tabulate them
+    * (reference: tears.py:92-115; utils.rate_of_return /
+    * std_conversion). */
+  private[graft] def rateConverted(
+      fd: FactorData, rows: Seq[MeanRow], withStdErr: Boolean): Seq[MeanRow] = {
+    val base = fd.horizons.head.span.toNanos.toDouble
+    val ratios = fd.horizons.map(h => base / h.span.toNanos.toDouble).toIndexedSeq
+    rows.map(r => r.copy(
+      mean = r.mean.zip(ratios).map { case (m, q) => m.map(rateOfReturn(_, q)) },
+      err =
+        if (withStdErr) r.err.zip(ratios).map { case (e, q) => e.map(stdConversion(_, 1.0 / q)) }
+        else r.err))
   }
 
   /** Difference between upper- and lower-quantile mean returns with joint
@@ -210,34 +313,38 @@ object Returns {
       upperQuant: Int,
       lowerQuant: Int,
       returnCols: Seq[String]): DataFrame = {
-    val up = meanReturns.filter(col("factor_quantile") === upperQuant)
-    val lo = meanReturns.filter(col("factor_quantile") === lowerQuant)
-    val upSel = up.select((col("date") +: returnCols.flatMap(rc =>
-      Seq(col(rc).as(s"__u_$rc"), col(s"${rc}_std_err").as(s"__ue_$rc")))): _*)
-    val loSel = lo.select((col("date") +: returnCols.flatMap(rc =>
-      Seq(col(rc).as(s"__l_$rc"), col(s"${rc}_std_err").as(s"__le_$rc")))): _*)
-    val j = upSel.join(loSel, Seq("date"), "inner")
-    val outCols = col("date") +: returnCols.flatMap { rc =>
-      Seq((col(s"__u_$rc") - col(s"__l_$rc")).as(rc),
-        sqrt(pow(col(s"__ue_$rc"), 2) + pow(col(s"__le_$rc"), 2)).as(s"${rc}_std_err"))
-    }
-    j.select(outCols: _*).orderBy("date")
+    val n = returnCols.size
+    val rows = meanReturns.filter(col("factor_quantile").isin(upperQuant, lowerQuant))
+      .select((Seq(col("factor_quantile"), col("date")) ++ returnCols.flatMap(rc =>
+        Seq(col(rc), col(s"${rc}_std_err")))): _*)
+      .collect().toSeq
+      .map(r => MeanRow(Seq(r.get(0), r.get(1)),
+        (0 until n).map(i => opt(r, 2 + 2 * i)), (0 until n).map(i => opt(r, 3 + 2 * i))))
+    meanTable(meanReturns.sparkSession, Seq(meanReturns.schema("date")), returnCols,
+      spreadRows(rows, upperQuant, lowerQuant))
   }
 
-  /** Top and bottom factor_quantile ids of a factor_data table
-    * (reference: tears.py:121-123, plotting.py:644-648). */
-  def quantileExtremes(fd: FactorData): (Int, Int) = {
-    val r = fd.df.agg(max(col("factor_quantile")), min(col("factor_quantile"))).first()
-    (r.getInt(0), r.getInt(1))
+  /** The spread rows, keyed by date in order, over (factor_quantile,
+    * date) mean rows: the dates both quantiles reach. */
+  private[graft] def spreadRows(
+      byDate: Seq[MeanRow], upperQuant: Int, lowerQuant: Int): Seq[MeanRow] = {
+    val lower = byDate.filter(_.keys.head == lowerQuant).map(r => r.keys(1) -> r).toMap
+    def minus(a: Option[Double], b: Option[Double]) = for (x <- a; y <- b) yield x - y
+    def joint(a: Option[Double], b: Option[Double]) = for (x <- a; y <- b) yield
+      math.sqrt(StrictMath.pow(x, 2) + StrictMath.pow(y, 2))
+    byDate.filter(_.keys.head == upperQuant)
+      .sortWith((a, b) => PanelPasses.compareKeys(a.keys(1), b.keys(1)) < 0)
+      .flatMap(u => lower.get(u.keys(1)).map(l => MeanRow(Seq(u.keys(1)),
+        u.mean.zip(l.mean).map((minus _).tupled), u.err.zip(l.err).map((joint _).tupled))))
   }
 
   /** Convert a 1-period return to a `base`-period rate of return:
     * (1+r)^(base/period) - 1 (reference: alphalens/utils.py:844-869). */
-  def rateOfReturn(c: Column, conversionFactor: Double): Column =
-    pow(c + 1.0, conversionFactor) - 1.0
+  def rateOfReturn(r: Double, conversionFactor: Double): Double =
+    StrictMath.pow(r + 1.0, conversionFactor) - 1.0
 
   /** Standard-deviation horizon conversion: s / sqrt(period/base)
     * (reference: alphalens/utils.py:872-895). */
-  def stdConversion(c: Column, periodOverBase: Double): Column =
-    c / math.sqrt(periodOverBase)
+  def stdConversion(s: Double, periodOverBase: Double): Double =
+    s / math.sqrt(periodOverBase)
 }

@@ -63,6 +63,58 @@ object StatFunctions extends Serializable {
       (lnGamma(a) + lnGamma(b) - lnGamma(a + b))) * cf(1 - x, b, a) / b
   }
 
+  // ---- driver folds over the collected tear-sheet series ---------------
+  // Each takes the non-null values in the order the caller fixes (dates
+  // ascending) and returns None where Spark's aggregate returns null.
+
+  /** Spark `avg`: a left fold from 0.0, then one division. */
+  def mean(xs: Seq[Double]): Option[Double] =
+    if (xs.isEmpty) None else Some(xs.foldLeft(0.0)(_ + _) / xs.length)
+
+  /** Sums of the 2nd, 3rd and 4th powers of the deviations from `mu`. */
+  private def centralSums(xs: Seq[Double], mu: Double): (Double, Double, Double) =
+    xs.foldLeft((0.0, 0.0, 0.0)) { case ((m2, m3, m4), x) =>
+      val d = x - mu
+      (m2 + d * d, m3 + d * d * d, m4 + d * d * d * d)
+    }
+
+  /** Spark `var_samp`. */
+  def varSamp(xs: Seq[Double]): Option[Double] =
+    if (xs.length < 2) None
+    else mean(xs).map(mu => centralSums(xs, mu)._1 / (xs.length - 1))
+
+  /** Spark `stddev_samp`. */
+  def stddevSamp(xs: Seq[Double]): Option[Double] = varSamp(xs).map(math.sqrt)
+
+  /** Spark `covar_samp` over the pairs where both values are present. */
+  def covarSamp(xys: Seq[(Double, Double)]): Option[Double] =
+    if (xys.length < 2) None
+    else for {
+      mx <- mean(xys.map(_._1))
+      my <- mean(xys.map(_._2))
+    } yield xys.foldLeft(0.0) { case (s, (x, y)) => s + (x - mx) * (y - my) } /
+      (xys.length - 1)
+
+  /** Spark `skewness` (population moments; null on zero variance). */
+  def skewness(xs: Seq[Double]): Option[Double] =
+    mean(xs).flatMap { mu =>
+      val (m2, m3, _) = centralSums(xs, mu)
+      if (m2 == 0.0) None else Some(math.sqrt(xs.length.toDouble) * m3 / math.sqrt(m2 * m2 * m2))
+    }
+
+  /** Spark `kurtosis` (excess, population moments; null on zero
+    * variance). */
+  def kurtosis(xs: Seq[Double]): Option[Double] =
+    mean(xs).flatMap { mu =>
+      val (m2, _, m4) = centralSums(xs, mu)
+      if (m2 == 0.0) None else Some(xs.length * m4 / (m2 * m2) - 3.0)
+    }
+
+  /** Division with a null result for a missing operand or a zero
+    * divisor. */
+  def div(a: Option[Double], b: Option[Double]): Option[Double] =
+    for (x <- a; y <- b if y != 0.0) yield x / y
+
   /** P(T <= t) for Student-t with df degrees of freedom. */
   def tCdf(t: Double, df: Double): Double = {
     val x = df / (df + t * t)

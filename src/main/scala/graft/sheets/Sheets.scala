@@ -1,32 +1,37 @@
 package graft.sheets
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.{DoubleType, StructField}
 
 import graft.ingest.FactorData
-import graft.perf.{Cumulative, EventStudy, Information, Returns, Turnover}
+import graft.perf.{Cumulative, EventStudy, Information, PanelPasses, Returns, Turnover}
 import graft.stats.Tables
 
 /** Tear-sheet composites (reference: alphalens/tears.py:61-732): each
-  * reference entry point rendered figures; here each returns a struct of
-  * the result TABLES (the numbers behind every figure), all lazy
-  * DataFrames fanned out from one shared factor_data input — callers
-  * should persist `fd.df` first (SURVEY §3 lifecycle).
+  * reference entry point rendered figures; here each returns the result
+  * TABLES (the numbers behind every figure).
+  *
+  * A composite is one fan-out over the date-clustered factor panel
+  * (SURVEY §3 lifecycle — callers should persist `fd.df` first): a
+  * fixed set of shared panel passes ([[graft.perf.PanelPasses]]:
+  * quantile stats, weighted factor returns, stage-1 moments with the
+  * universe means, by-group moments, the IC series, the by-group IC,
+  * the turnover sets and the rank autocorrelation), each collected to
+  * the driver the first time one of the sheet's tables needs it and
+  * never again. Every table is then finished in plain Scala and
+  * returned as a local DataFrame whose rows are already in order, so
+  * reading, projecting or filtering it runs no Spark job. The tables
+  * are lazy: building a sheet runs nothing, and only the passes behind
+  * the tables read are run. The full sheet shares one set of passes
+  * across its components.
   */
 object Sheets {
 
-  /** A tear sheet OWNS the persisted intermediates its tables fan out
-    * of. They are deliberately left cached while the caller reads the
-    * tables; a long-lived session building many sheets should call
-    * [[unpersist]] once the tables are materialized, or cached blocks
-    * accumulate until session end. Unpersisting is safe at any point:
-    * the tables stay valid and lazily recompute on the next action. */
+  /** A sheet holds its collected series on the driver and no persisted
+    * frame, so there is nothing to release; [[unpersist]] stays for
+    * callers that release sheets, and does nothing. */
   sealed trait TearSheet {
-    /** The persisted shared frames this sheet's tables read from. */
-    def cached: Seq[DataFrame]
-    /** Release every persisted intermediate this sheet owns. */
-    def unpersist(blocking: Boolean = false): Unit =
-      cached.foreach(_.unpersist(blocking))
+    def unpersist(blocking: Boolean = false): Unit = ()
   }
 
   /** Horizons whose span is a whole-day multiple, as day counts — the
@@ -35,184 +40,144 @@ object Sheets {
     fd.horizons.filter(h => h.span.toNanos % 86400000000000L == 0L)
       .map(_.span.toDays.toInt)
 
-  /** Persist a shared intermediate that several sheet tables fan out
-    * of. Every cached table here is bounded by dates × quantiles (×
-    * horizons), not by panel size, so the cache cost is negligible
-    * next to the panel re-scan it saves per downstream component. */
-  private def shared(df: DataFrame): DataFrame =
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
   // ---- summary --------------------------------------------------------
 
-  final case class SummaryTearSheet(
-      quantileStats: DataFrame,
-      returnsTable: DataFrame,
-      icSummary: DataFrame,
-      quantileTurnoverMeans: DataFrame,
-      autocorrelationMeans: DataFrame,
-      cached: Seq[DataFrame] = Nil) extends TearSheet
+  final class SummaryTearSheet private[sheets] (
+      p: PanelPasses, longShort: Boolean, groupNeutral: Boolean)
+      extends TearSheet {
+    private val periods = dayPeriods(p.fd)
+    lazy val quantileStats: DataFrame = Tables.quantileStatsFrom(p)
+    lazy val returnsTable: DataFrame = Tables.returnsTableFrom(p, longShort, groupNeutral)
+    lazy val icSummary: DataFrame = Information.icSummaryTable(p, groupAdjust = false)
+    lazy val quantileTurnoverMeans: DataFrame = Tables.turnoverMeansFrom(p, periods)
+    lazy val autocorrelationMeans: DataFrame = Tables.autocorrMeansFrom(p, periods)
+  }
 
   /** reference: tears.py:61-175 */
   def createSummaryTearSheet(
       fd: FactorData,
       longShort: Boolean = true,
-      groupNeutral: Boolean = false): SummaryTearSheet = {
-    val periods = dayPeriods(fd)
-    // ONE ranked panel (panel-sized cache, released by the unpersist
-    // hook) backs both rank consumers: the IC series reads all three
-    // rank columns, the autocorrelation table the factor rank — the
-    // factor-rank window sort runs once instead of once per component
-    val ranked = shared(Information.rankedPanel(fd, fd.df))
-    val ic = shared(Information.icFromRanked(fd, ranked))
-    val (retTable, retCached) = Tables.returnsTableCached(fd, longShort, groupNeutral)
-    // turnover membership sets aggregated ONCE and shared by every
-    // period's lag (was one panel aggregation per period)
-    val (turnMeans, sets) = Tables.quantileTurnoverMeansShared(fd, periods)
-    SummaryTearSheet(
-      quantileStats = Tables.quantileStatsTable(fd),
-      returnsTable = retTable,
-      icSummary = Information.icSummaryFrom(fd, ic),
-      quantileTurnoverMeans = turnMeans,
-      autocorrelationMeans = Tables.autocorrelationMeansFrom(fd,
-        ranked.select(col("date"), col("asset"), col("__rf").as("__rank")),
-        periods),
-      cached = Seq(ranked, ic, sets) ++ retCached)
-  }
+      groupNeutral: Boolean = false): SummaryTearSheet =
+    new SummaryTearSheet(new PanelPasses(fd), longShort, groupNeutral)
 
   // ---- returns --------------------------------------------------------
 
-  final case class ReturnsTearSheet(
-      factorReturns: DataFrame,
-      meanQuantRateret: DataFrame,
-      meanQuantRateretByDate: DataFrame,
-      spread: DataFrame,
-      alphaBeta: DataFrame,
-      returnsTable: DataFrame,
-      cumulativeReturns: Option[DataFrame],
-      cumulativeReturnsByQuantile: Option[DataFrame],
-      meanQuantRateretByGroup: Option[DataFrame],
-      cached: Seq[DataFrame] = Nil) extends TearSheet
+  /** The cumulative-return curves exist only when a one-day horizon is
+    * present (tears.py:280-294). */
+  final class ReturnsTearSheet private[sheets] (
+      p: PanelPasses, longShort: Boolean, groupNeutral: Boolean, byGroup: Boolean)
+      extends TearSheet {
+    private val fd = p.fd
+    private def means(byDate: Boolean, rate: Boolean, withStdErr: Boolean) = {
+      val rows = Returns.meanRows(p, byDate, byGroup = false, longShort, groupNeutral)
+      if (rate) Returns.rateConverted(fd, rows, withStdErr) else rows
+    }
+    private def meanTable(keys: Seq[String], rows: Seq[Returns.MeanRow]) =
+      Returns.meanTable(p.spark, keys.map(p.field), fd.returnCols, rows)
+    private lazy val byDateRate = means(byDate = true, rate = true, withStdErr = true)
+    private val oneDay = fd.horizons.indexWhere(_.span == java.time.Duration.ofDays(1))
 
-  /** reference: tears.py:178-344. The cumulative-return curves exist only
-    * when a one-day horizon is present (tears.py:280-294). */
+    lazy val factorReturns: DataFrame = Returns.factorReturnsTable(p, longShort, groupNeutral)
+    lazy val meanQuantRateret: DataFrame =
+      meanTable(Seq("factor_quantile"), means(byDate = false, rate = true, withStdErr = false))
+    lazy val meanQuantRateretByDate: DataFrame =
+      meanTable(Seq("factor_quantile", "date"), byDateRate)
+    lazy val spread: DataFrame = meanTable(Seq("date"),
+      Returns.spreadRows(byDateRate, byDateRate.last.keys.head.asInstanceOf[Int],
+        byDateRate.head.keys.head.asInstanceOf[Int]))
+    lazy val alphaBeta: DataFrame = Returns.statTable(p, Returns.alphaBetaRows(p,
+      p.factorReturns(longShort, groupNeutral).toSeq, longShort, groupNeutral))
+    lazy val returnsTable: DataFrame = Tables.returnsTableFrom(p, longShort, groupNeutral)
+    lazy val cumulativeReturns: Option[DataFrame] = curve(Nil) {
+      p.factorReturns(longShort, groupNeutral).toSeq
+        .map(r => (Seq(r.get(0)), PanelPasses.opt(r, 1 + oneDay)))
+    }
+    lazy val cumulativeReturnsByQuantile: Option[DataFrame] = curve(Seq("factor_quantile")) {
+      means(byDate = true, rate = false, withStdErr = false)
+        .map(r => (r.keys, r.mean(oneDay)))
+    }
+    lazy val meanQuantRateretByGroup: Option[DataFrame] =
+      if (!byGroup) None
+      else Some(meanTable(Seq("factor_quantile", "group"), Returns.rateConverted(fd,
+        Returns.meanRows(p, byDate = false, byGroup = true, longShort, groupNeutral),
+        withStdErr = false)))
+
+    /** cumprod(1 + r) of the one-day horizon per `keys` partition, over
+      * (partition keys :+ date, return) rows in (keys, date) order. */
+    private def curve(keys: Seq[String])(
+        rows: => Seq[(Seq[Any], Option[Double])]): Option[DataFrame] =
+      if (oneDay < 0) None
+      else {
+        val label = fd.returnCols(oneDay)
+        val out = rows.groupBy(_._1.init).toSeq
+          .sortWith((a, b) => PanelPasses.seqLess(a._1, b._1))
+          .flatMap { case (_, rs) =>
+            rs.zip(Cumulative.cumulative(rs.map(_._2)))
+              .map { case ((k, _), c) => Row.fromSeq(k :+ c) }
+          }
+        Some(PanelPasses.local(p.spark,
+          (keys :+ "date").map(p.field) :+ StructField(s"cum_$label", DoubleType),
+          out))
+      }
+  }
+
+  /** reference: tears.py:178-344 */
   def createReturnsTearSheet(
       fd: FactorData,
       longShort: Boolean = true,
       groupNeutral: Boolean = false,
-      byGroup: Boolean = false): ReturnsTearSheet = {
-    // shared building blocks, each computed ONCE: the weighted factor
-    // returns (feeds the series, alpha/beta, and cumulative curve),
-    // the stage-1 (quantile, date) return moments (feeds both
-    // mean-quantile tables, the spread, the by-quantile cumulative
-    // curves, and the returns table), and alpha/beta itself (feeds its
-    // own section and the returns table)
-    val fr = shared(Returns.factorReturns(fd, longShort, groupNeutral))
-    val s1 = shared(Returns.meanReturnsStage1(fd, demeaned = longShort,
-      groupAdjust = groupNeutral))
-    val rawByDate = Returns.meanReturnFromStage1(fd, s1, byDate = true)
-    val mqr = Tables.rateConvert(Returns.meanReturnFromStage1(fd, s1), fd)
-    val mqrDate = Tables.rateConvert(rawByDate, fd, withStdErr = true)
-    // quantile extremes off the persisted panel — same values as the
-    // by-date table's (every quantile reaches stage 1), without
-    // executing the whole by-date plan for two ints
-    val (qTop, qBottom) = Returns.quantileExtremes(fd)
-    val spread = Returns.computeMeanReturnsSpread(mqrDate,
-      qTop, qBottom, fd.returnCols)
-    val ab = shared(Returns.factorAlphaBeta(fd, returns = Some(fr),
-      demeaned = longShort, groupAdjust = groupNeutral))
-
-    val oneDay = fd.horizons.find(_.span == java.time.Duration.ofDays(1))
-    val cum = oneDay.map { h =>
-      Cumulative.cumulativeReturns(fr.select(col("date"), col(h.label)), h.label)
-        .select("date", s"cum_${h.label}")
-    }
-    val cumByQ = oneDay.map { h =>
-      val byDate = rawByDate
-        .select(col("factor_quantile"), col("date"), col(h.label))
-      Cumulative.cumulativeReturns(byDate, h.label, Seq("factor_quantile"))
-        .select("factor_quantile", "date", s"cum_${h.label}")
-    }
-    val byGrp =
-      if (byGroup)
-        Some(Tables.rateConvert(Returns.meanReturnByQuantile(fd,
-          byDate = false, byGroup = true, demeaned = longShort,
-          groupAdjust = groupNeutral), fd))
-      else None
-    ReturnsTearSheet(fr, mqr, mqrDate, spread, ab,
-      Tables.returnsTableFrom(fd, ab, mqr, mqrDate), cum, cumByQ, byGrp,
-      cached = Seq(fr, s1, ab))
-  }
+      byGroup: Boolean = false): ReturnsTearSheet =
+    new ReturnsTearSheet(new PanelPasses(fd), longShort, groupNeutral, byGroup)
 
   // ---- information ----------------------------------------------------
 
-  final case class InformationTearSheet(
-      ic: DataFrame,
-      icSummary: DataFrame,
-      monthlyMeanIc: DataFrame,
-      meanIcByGroup: Option[DataFrame],
-      cached: Seq[DataFrame] = Nil) extends TearSheet
+  final class InformationTearSheet private[sheets] (
+      p: PanelPasses, groupNeutral: Boolean, byGroup: Boolean)
+      extends TearSheet {
+    lazy val ic: DataFrame = Information.icTable(p, groupNeutral)
+    lazy val icSummary: DataFrame = Information.icSummaryTable(p, groupNeutral)
+    lazy val monthlyMeanIc: DataFrame =
+      Information.meanIcTable(p, groupNeutral, byGroup = false, byTime = Some("M"))
+    lazy val meanIcByGroup: Option[DataFrame] =
+      if (byGroup) Some(Information.meanIcTable(p, groupNeutral, byGroup = true, byTime = None))
+      else None
+  }
 
   /** reference: tears.py:347-406 */
   def createInformationTearSheet(
       fd: FactorData,
       groupNeutral: Boolean = false,
-      byGroup: Boolean = false): InformationTearSheet = {
-    // the per-date rank-window IC series is the expensive part — one
-    // computation serves the series, the summary rows, and the
-    // monthly means (the by-group variant partitions its windows
-    // differently and stays separate)
-    val ic = shared(Information.factorInformationCoefficient(fd,
-      groupAdjust = groupNeutral))
-    val monthly = Information.meanIcFrom(fd, ic, byTime = Some("M"))
-    val grp =
-      if (byGroup)
-        Some(Information.meanInformationCoefficient(fd,
-          groupAdjust = groupNeutral, byGroup = true))
-      else None
-    InformationTearSheet(ic, Information.icSummaryFrom(fd, ic),
-      monthly, grp, cached = Seq(ic))
-  }
+      byGroup: Boolean = false): InformationTearSheet =
+    new InformationTearSheet(new PanelPasses(fd), groupNeutral, byGroup)
 
   // ---- turnover -------------------------------------------------------
 
-  final case class TurnoverTearSheet(
-      quantileTurnover: DataFrame,    // (period, factor_quantile, date, turnover)
-      autocorrelation: DataFrame,     // (period, date, autocorr)
-      quantileTurnoverMeans: DataFrame,
-      autocorrelationMeans: DataFrame,
-      cached: Seq[DataFrame] = Nil) extends TearSheet
+  final class TurnoverTearSheet private[sheets] (p: PanelPasses, periods: Seq[Int])
+      extends TearSheet {
+    /** (period, factor_quantile, date, turnover) */
+    lazy val quantileTurnover: DataFrame = Turnover.turnoverTable(p, periods)
+    /** (period, date, autocorr) */
+    lazy val autocorrelation: DataFrame = Turnover.autocorrTable(p, periods)
+    lazy val quantileTurnoverMeans: DataFrame = Tables.turnoverMeansFrom(p, periods)
+    lazy val autocorrelationMeans: DataFrame = Tables.autocorrMeansFrom(p, periods)
+  }
 
   /** reference: tears.py:409-485 */
   def createTurnoverTearSheet(
       fd: FactorData,
-      turnoverPeriods: Option[Seq[Int]] = None): TurnoverTearSheet = {
-    val periods = turnoverPeriods.getOrElse(dayPeriods(fd))
-    // both series are computed once; their means are cheap re-groups
-    // of the persisted series rather than second set-lag / lag-join
-    // passes over the panel
-    val qt = shared(periods.map { p =>
-      Turnover.allQuantileTurnover(fd, p).withColumn("period", lit(s"${p}D"))
-    }.reduce(_.unionByName(_))
-      .select("period", "factor_quantile", "date", "turnover"))
-    val ac = shared(Turnover.factorRankAutocorrelationMulti(fd, periods)
-      .select(concat(col("period").cast("string"), lit("D")).as("period"),
-        col("date"), col("autocorr")))
-    TurnoverTearSheet(qt, ac,
-      Tables.quantileTurnoverMeansFrom(qt),
-      Tables.autocorrelationMeansFrom(ac),
-      cached = Seq(qt, ac))
-  }
+      turnoverPeriods: Option[Seq[Int]] = None): TurnoverTearSheet =
+    new TurnoverTearSheet(new PanelPasses(fd), turnoverPeriods.getOrElse(dayPeriods(fd)))
 
   // ---- full -----------------------------------------------------------
 
-  final case class FullTearSheet(
-      quantileStats: DataFrame,
-      returns: ReturnsTearSheet,
-      information: InformationTearSheet,
-      turnover: TurnoverTearSheet) extends TearSheet {
-    /** Cascades over the component sheets' persisted intermediates. */
-    override def cached: Seq[DataFrame] =
-      returns.cached ++ information.cached ++ turnover.cached
+  /** The four component sheets over ONE set of passes. */
+  final class FullTearSheet private[sheets] (
+      p: PanelPasses, longShort: Boolean, groupNeutral: Boolean, byGroup: Boolean)
+      extends TearSheet {
+    lazy val quantileStats: DataFrame = Tables.quantileStatsFrom(p)
+    val returns = new ReturnsTearSheet(p, longShort, groupNeutral, byGroup)
+    val information = new InformationTearSheet(p, groupNeutral, byGroup)
+    val turnover = new TurnoverTearSheet(p, dayPeriods(p.fd))
   }
 
   /** reference: tears.py:488-526 */
@@ -221,11 +186,7 @@ object Sheets {
       longShort: Boolean = true,
       groupNeutral: Boolean = false,
       byGroup: Boolean = false): FullTearSheet =
-    FullTearSheet(
-      quantileStats = Tables.quantileStatsTable(fd),
-      returns = createReturnsTearSheet(fd, longShort, groupNeutral, byGroup),
-      information = createInformationTearSheet(fd, groupNeutral, byGroup),
-      turnover = createTurnoverTearSheet(fd))
+    new FullTearSheet(new PanelPasses(fd), longShort, groupNeutral, byGroup)
 
   // ---- event sheets ---------------------------------------------------
 

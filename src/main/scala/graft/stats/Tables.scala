@@ -1,11 +1,13 @@
 package graft.stats
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField}
 
 import graft.ingest.FactorData
-import graft.perf.{Information, Returns, StatFunctions, Turnover}
+import graft.perf.{PanelPasses, Returns, StatFunctions, Turnover}
+import graft.perf.PanelPasses.box
 
 /** The numbers behind every tear-sheet table/figure
   * (reference: alphalens/plotting.py — the table computations, not the
@@ -13,8 +15,13 @@ import graft.perf.{Information, Returns, StatFunctions, Turnover}
   * or (key, per-horizon columns) shapes replace the reference's wide
   * pretty-printed frames.
   *
-  * All operators aggregate the (already tiny) analytic series or the
-  * factor panel itself; none collect to the driver.
+  * The factor-panel tables (quantile stats, returns table, turnover and
+  * autocorrelation means) read bounded series that the shared panel
+  * passes ([[graft.perf.PanelPasses]]) collect to the driver once —
+  * at most dates × quantiles × horizons rows each, with dates bounded
+  * by `spark.graft.calendar.maxInstants` — and return local DataFrames
+  * whose rows are already in order. The IC histogram, Q-Q, events and
+  * rolling tables aggregate the DataFrame they are given in Spark.
   */
 object Tables {
 
@@ -22,183 +29,97 @@ object Tables {
 
   /** Per-quantile factor statistics (reference: plotting.py:182-189).
     * Output: (factor_quantile, min, max, mean, std, count, count_pct). */
-  def quantileStatsTable(fd: FactorData): DataFrame = {
-    val f = col("factor")
-    fd.df.groupBy("factor_quantile")
-      .agg(min(f).as("min"), max(f).as("max"), avg(f).as("mean"),
-        stddev_samp(f).as("std"), count(f).as("count"))
-      .withColumn("count_pct",
-        col("count") * 100.0 / sum(col("count")).over(Window.partitionBy()))
-      .orderBy("factor_quantile")
-  }
+  def quantileStatsTable(fd: FactorData): DataFrame =
+    quantileStatsFrom(new PanelPasses(fd))
 
-  /** Convert mean returns (and optionally std errors) of every horizon to
-    * the base (first) horizon's rate, as the tear sheets do before
-    * tabulating (reference: tears.py:92-115; utils.rate_of_return /
-    * std_conversion). */
-  def rateConvert(
-      df: DataFrame,
-      fd: FactorData,
-      withStdErr: Boolean = false): DataFrame = {
-    val base = fd.horizons.head.span.toNanos.toDouble
-    fd.horizons.foldLeft(df) { (d, h) =>
-      val ratio = base / h.span.toNanos.toDouble // base/period
-      val d1 = d.withColumn(h.label, Returns.rateOfReturn(col(h.label), ratio))
-      if (withStdErr)
-        d1.withColumn(s"${h.label}_std_err",
-          Returns.stdConversion(col(s"${h.label}_std_err"), 1.0 / ratio))
-      else d1
-    }
+  private[graft] def quantileStatsFrom(p: PanelPasses): DataFrame = {
+    val rows = p.quantileStats.toSeq
+    val total = rows.map(_.getLong(5)).sum.toDouble
+    PanelPasses.local(p.spark,
+      (p.field("factor_quantile") +:
+        Seq("min", "max", "mean", "std").map(StructField(_, DoubleType))) ++
+        Seq(StructField("count", LongType), StructField("count_pct", DoubleType)),
+      rows.map(r => Row.fromSeq(r.toSeq :+ r.getLong(5) * 100.0 / total)))
   }
 
   /** Returns analysis table (reference: plotting.py:134-147): Ann. alpha,
     * beta, top/bottom-quantile mean period-wise rate-converted return
-    * (bps) and mean spread (bps), one column per horizon. Persists
-    * nothing: the caller gets no handle to release, so a persisted
-    * intermediate would stay cached until session end. */
+    * (bps) and mean spread (bps), one column per horizon. */
   def returnsTable(
       fd: FactorData,
       demeaned: Boolean = true,
       groupAdjust: Boolean = false): DataFrame =
-    returnsTable0(fd, demeaned, groupAdjust, persist = false)._1
+    returnsTableFrom(new PanelPasses(fd), demeaned, groupAdjust)
 
-  /** [[returnsTable]] plus the persisted intermediates backing it —
-    * callers that build many tables (the tear-sheet composites) take
-    * this variant and unpersist once materialized. */
+  /** [[returnsTable]] with the list of intermediates a caller should
+    * unpersist, for callers that release one. The table is finished on
+    * the driver and persists nothing, so the list is empty. */
   def returnsTableCached(
       fd: FactorData,
       demeaned: Boolean = true,
       groupAdjust: Boolean = false): (DataFrame, Seq[DataFrame]) =
-    returnsTable0(fd, demeaned, groupAdjust, persist = true)
+    (returnsTable(fd, demeaned, groupAdjust), Nil)
 
-  private def returnsTable0(
-      fd: FactorData,
-      demeaned: Boolean,
-      groupAdjust: Boolean,
-      persist: Boolean): (DataFrame, Seq[DataFrame]) = {
-    val ab = Returns.factorAlphaBeta(fd, demeaned = demeaned,
-      groupAdjust = groupAdjust)
-    // bounded (quantiles x dates) — when persisted, the top/bottom/
-    // spread rows all read one materialization instead of
-    // re-aggregating the panel per branch
-    val stage1 = Returns.meanReturnsStage1(fd, demeaned = demeaned,
-      groupAdjust = groupAdjust)
-    val s1 =
-      if (persist)
-        stage1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else stage1
-    val mrq = rateConvert(Returns.meanReturnFromStage1(fd, s1), fd)
-    val mrqDate = rateConvert(
-      Returns.meanReturnFromStage1(fd, s1, byDate = true), fd,
+  /** [[returnsTable]] from the shared passes: the alpha/beta rows and
+    * both rate-converted mean-quantile tables of the returns sheet. */
+  private[graft] def returnsTableFrom(
+      p: PanelPasses, demeaned: Boolean, groupAdjust: Boolean): DataFrame = {
+    val n = p.fd.returnCols.size
+    val ab = Returns.alphaBetaRows(p, p.factorReturns(demeaned, groupAdjust).toSeq,
+      demeaned, groupAdjust)
+    val mrq = Returns.rateConverted(p.fd,
+      Returns.meanRows(p, byDate = false, byGroup = false, demeaned, groupAdjust),
+      withStdErr = false)
+    val mrqDate = Returns.rateConverted(p.fd,
+      Returns.meanRows(p, byDate = true, byGroup = false, demeaned, groupAdjust),
       withStdErr = true)
-    (returnsTableFrom(fd, ab, mrq, mrqDate), if (persist) Seq(s1) else Nil)
-  }
-
-  /** [[returnsTable]] from precomputed components — the returns
-    * tear-sheet composite shares its alpha/beta table and both
-    * rate-converted mean-quantile tables with this summary row set
-    * instead of re-aggregating the panel. `mrq`/`mrqDate` must already
-    * be rate-converted (with std errors on the by-date table). */
-  def returnsTableFrom(
-      fd: FactorData,
-      ab: DataFrame,
-      mrq: DataFrame,
-      mrqDate: DataFrame): DataFrame = {
-    val qext = mrq.agg(max("factor_quantile").as("__qmax"),
-      min("factor_quantile").as("__qmin"))
-    val top = mrq.join(qext, mrq("factor_quantile") === qext("__qmax"))
-      .select(lit("Mean Period Wise Return Top Quantile (bps)").as("stat") +:
-        fd.returnCols.map(rc => (col(rc) * DecimalToBps).as(rc)): _*)
-    val bottom = mrq.join(qext, mrq("factor_quantile") === qext("__qmin"))
-      .select(lit("Mean Period Wise Return Bottom Quantile (bps)").as("stat") +:
-        fd.returnCols.map(rc => (col(rc) * DecimalToBps).as(rc)): _*)
-    val (qTop, qBottom) = Returns.quantileExtremes(fd)
-    val spread = Returns.computeMeanReturnsSpread(mrqDate, qTop, qBottom,
-      fd.returnCols)
-    val spreadAggs = first(lit("Mean Period Wise Spread (bps)")).as("stat") +:
-      fd.returnCols.map(rc => (avg(col(rc)) * DecimalToBps).as(rc))
-    val spreadRow = spread.agg(spreadAggs.head, spreadAggs.tail: _*)
-    ab.withColumnRenamed("stat", "stat")
-      .unionByName(top).unionByName(bottom).unionByName(spreadRow)
-  }
-
-  /** Sets-once fusion of the summary sheet's turnover means
-    * (reference: plotting.py:150-156): the per-(quantile, date)
-    * membership sets are ONE panel aggregation, persisted (bounded:
-    * quantiles × dates rows), and every period's lag reads that single
-    * materialization — [[quantileTurnoverMeans]] re-aggregates the
-    * panel once per period. A GROUPING SETS fusion with the quantile
-    * stats table was measured SLOWER here (Expand doubles the panel
-    * rows and the quantile-only grouping set drags universe-wide
-    * collect_set buffers through every partial), so the fusion stops
-    * at the genuinely shared work. The turnover path is float-free
-    * until the final size ratio, so values are bit-identical by
-    * construction; the staged bitwise replay (SURVEY §5) pins it.
-    * Returns (turnoverMeans, persisted sets frame to unpersist). */
-  private[graft] def quantileTurnoverMeansShared(
-      fd: FactorData,
-      periods: Seq[Int]): (DataFrame, DataFrame) = {
-    val sets = fd.df.groupBy("date", "factor_quantile")
-      .agg(collect_set(col("asset")).as("__names"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val w = Window.partitionBy("factor_quantile").orderBy("date")
-    val series = periods.map { p =>
-      sets.withColumn("__prev", lag(col("__names"), p).over(w))
-        .withColumn("turnover",
-          size(array_except(col("__names"), col("__prev"))).cast("double") /
-            size(col("__names")))
-        .filter(col("__prev").isNotNull)
-        .select(col("date"), col("factor_quantile"), col("turnover"))
-        .withColumn("period", lit(s"${p}D"))
-    }.reduce(_.unionByName(_))
-    (quantileTurnoverMeansFrom(series), sets)
+    val top = mrq.last
+    val bottom = mrq.head
+    val spread = Returns.spreadRows(mrqDate,
+      top.keys.head.asInstanceOf[Int], bottom.keys.head.asInstanceOf[Int])
+    def bps(v: Option[Double]) = v.map(_ * DecimalToBps)
+    Returns.statTable(p, ab ++ Seq(
+      "Mean Period Wise Return Top Quantile (bps)" -> top.mean.map(bps),
+      "Mean Period Wise Return Bottom Quantile (bps)" -> bottom.mean.map(bps),
+      "Mean Period Wise Spread (bps)" -> (0 until n).map(i =>
+        bps(StatFunctions.mean(spread.flatMap(_.mean(i)))))))
   }
 
   /** Mean quantile turnover per period
     * (reference: plotting.py:150-156). Output: (factor_quantile,
     * period, mean_turnover). */
   def quantileTurnoverMeans(fd: FactorData, periods: Seq[Int]): DataFrame =
-    quantileTurnoverMeansFrom(
-      periods.map { p =>
-        Turnover.allQuantileTurnover(fd, p).withColumn("period", lit(s"${p}D"))
-      }.reduce(_.unionByName(_)))
+    turnoverMeansFrom(new PanelPasses(fd), periods)
 
-  /** [[quantileTurnoverMeans]] over a precomputed (period,
-    * factor_quantile, date, turnover) series — the turnover tear sheet
-    * derives the means from its persisted series instead of
-    * recomputing the set-lag windows per period. */
-  def quantileTurnoverMeansFrom(series: DataFrame): DataFrame =
-    series.groupBy("factor_quantile", "period")
-      .agg(avg("turnover").as("mean_turnover"))
-      .select("factor_quantile", "period", "mean_turnover")
-      .orderBy("factor_quantile", "period")
+  /** [[quantileTurnoverMeans]] from the turnover pass: the membership
+    * sets are aggregated once for every period. */
+  private[graft] def turnoverMeansFrom(p: PanelPasses, periods: Seq[Int]): DataFrame = {
+    val byKey = Turnover.turnoverRows(p, periods)
+      .groupBy(r => Seq(r.get(1), r.get(0))).toSeq
+      .sortWith((a, b) => PanelPasses.seqLess(a._1, b._1))
+    PanelPasses.local(p.spark,
+      Seq(p.field("factor_quantile"), StructField("period", StringType),
+        StructField("mean_turnover", DoubleType)),
+      byKey.map { case (k, rs) =>
+        Row.fromSeq(k :+ box(StatFunctions.mean(rs.map(_.getDouble(3)))))
+      })
+  }
 
   /** Mean factor rank autocorrelation per period
     * (reference: plotting.py:157-160). Output: (period, mean_autocorr). */
   def autocorrelationMeans(fd: FactorData, periods: Seq[Int]): DataFrame =
-    autocorrMeansPost(Turnover.factorRankAutocorrelationMulti(fd, periods))
+    autocorrMeansFrom(new PanelPasses(fd), periods)
 
-  /** [[autocorrelationMeans]] over precomputed per-date factor ranks —
-    * the summary sheet's shared ranked panel. */
-  private[graft] def autocorrelationMeansFrom(
-      fd: FactorData, ranks: DataFrame, periods: Seq[Int]): DataFrame =
-    autocorrMeansPost(
-      Turnover.factorRankAutocorrelationMultiFrom(fd, ranks, periods))
-
-  private def autocorrMeansPost(series: DataFrame): DataFrame =
-    series.groupBy("period").agg(avg("autocorr").as("mean_autocorr"))
-      .select(concat(col("period").cast("string"), lit("D")).as("period"),
-        col("mean_autocorr"))
-      .orderBy("period")
-
-  /** [[autocorrelationMeans]] over a precomputed (period, date,
-    * autocorr) series whose period labels are already "ND" strings —
-    * the turnover tear sheet derives the means from its persisted
-    * series instead of recomputing the lag joins per period. */
-  def autocorrelationMeansFrom(series: DataFrame): DataFrame =
-    series.groupBy("period").agg(avg("autocorr").as("mean_autocorr"))
-      .select("period", "mean_autocorr")
-      .orderBy("period")
+  /** [[autocorrelationMeans]] from the autocorrelation pass. */
+  private[graft] def autocorrMeansFrom(p: PanelPasses, periods: Seq[Int]): DataFrame = {
+    val byPeriod = Turnover.autocorrRows(p, periods).groupBy(_.getString(0)).toSeq
+      .sortWith((a, b) => PanelPasses.compareKeys(a._1, b._1) < 0)
+    PanelPasses.local(p.spark,
+      Seq(StructField("period", StringType), StructField("mean_autocorr", DoubleType)),
+      byPeriod.map { case (period, rs) =>
+        Row(period, box(StatFunctions.mean(rs.filter(!_.isNullAt(2)).map(_.getDouble(2)))))
+      })
+  }
 
   /** IC histogram table (the numbers behind plotting.py:248-289's
     * distplot): `bins` equal-width buckets over [-1, 1] (the IC domain),

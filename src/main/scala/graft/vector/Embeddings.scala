@@ -153,19 +153,21 @@ object Embeddings {
   }
 
   /** (idCol, cell, dist): each vector's assigned coarse cell and its
-    * exact grid squared distance to it — one kernel evaluation. */
+    * exact grid squared distance to it — one fused kernel evaluation.
+    * Null vectors are dropped on the raw column (they never joined a
+    * cell's stats), and the kernel is non-nullable, so the join on
+    * `cell` infers no Filter that would evaluate it a second time. */
   private[graft] def assignDist(
       df: DataFrame,
       centroids: Array[Array[Double]],
       idCol: String,
       vecCol: String,
       passthrough: Seq[String] = Nil): DataFrame =
-    df.select(col(idCol) +: passthrough.map(col) :+
-        Ivf.quantizedDists(col(vecCol), centroids).as("__dists"): _*)
+    df.filter(col(vecCol).isNotNull)
       .select(col(idCol) +: passthrough.map(col) :+
-        (array_position(col("__dists"), array_min(col("__dists"))) - 1)
-          .cast("int").as("cell") :+
-        array_min(col("__dists")).as("dist"): _*)
+        Ivf.nearestCellDist(col(vecCol), centroids).as("__nd"): _*)
+      .select(col(idCol) +: passthrough.map(col) :+
+        col("__nd.cell").as("cell") :+ col("__nd.dist").as("dist"): _*)
 
   /** Per-cell exact distance moments (cell, n, __s1, __s2) — the
     * bounded, persistable artifact an online outlier gate scores

@@ -62,9 +62,9 @@ object Ivf {
   private[graft] val BcastThreshold: Long = 1L << 18
 
   /** `array<double>` of squared L2 distances to every centroid — the
-    * ADC distance tables of [[Pq]] and the distance-keeping
-    * [[Embeddings.assignDist]]; cell assignment and probing use the
-    * fused [[nearestCell]] / [[nearestCellsOf]] kernels instead. This
+    * ADC distance tables of [[Pq]]; cell assignment, probing and
+    * [[Embeddings.assignDist]] use the fused [[nearestCell]] /
+    * [[nearestCellsOf]] / [[nearestCellDist]] kernels instead. This
     * is ONE codegen'd `graft_l2sq_cells` call carrying the matrix as a
     * single reference object — or, past [[BcastThreshold]] elements,
     * the bitwise-identical broadcast-backed variant
@@ -118,6 +118,13 @@ object Ivf {
       centroids: Array[Array[Double]], snapIt: Boolean = true): Column =
     ColumnBridge.column(graft.functions.NearestCell(
       ColumnBridge.expression(vec), matrixBc(centroids), snapIt))
+
+  /** The nearest cell and the exact grid squared distance to it, as a
+    * non-nullable struct<cell, dist> (see [[nearestCell]]). */
+  private[vector] def nearestCellDist(
+      vec: Column, centroids: Array[Array[Double]]): Column =
+    ColumnBridge.column(graft.functions.NearestCellDist(
+      ColumnBridge.expression(vec), matrixBc(centroids), snapIt = true))
 
   /** Nearest-cell assignment (0-based) of a vector column against a
     * trained centroid matrix — the building block cluster-based

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
-import graft.functions.{CellKernels, NearestCell, NearestCells, SnapGrid}
+import graft.functions.{CellKernels, NearestCell, NearestCellDist, NearestCells, SnapGrid}
 
 /** Exactness of the fused IVF kernels against the compositions they
   * replace: the grid snap against Spark's `round(x * 1e6, 0)`, and
@@ -192,6 +192,23 @@ class CellKernelSpec extends AnyFunSuite with SparkSpec {
     }
     info(s"$ties of 300 vectors tie three or more cells at their minimum")
     assert(ties > 50, s"only $ties vectors had a multi-way tie")
+    // the fused (cell, dist) kernel of the outlier scores: the same
+    // argmin as graft_nearest_cell, and array_min's distance bit for bit
+    def withDist(): Seq[(Long, Int, Long, Option[Long])] = {
+      val d = Ivf.quantizedDists(col("embedding"), cents)
+      vecs.select(col("vec_id"), Ivf.nearestCellDist(col("embedding"), cents).as("cd"),
+          array_min(d).as("old"))
+        .orderBy("vec_id").collect().toSeq
+        .map(r => (r.getLong(0), r.getStruct(1).getInt(0),
+          bits(r.getStruct(1).getDouble(1)),
+          if (r.isNullAt(2)) None else Some(bits(r.getDouble(2)))))
+    }
+    val fused = withDist()
+    assert(fused === withInterpreted(withDist()))
+    fused.zip(codegen).foreach { case ((id, cell, dist, old), (_, got, _, _, _, _)) =>
+      assert(cell === got, s"vec $id: fused cell $cell vs graft_nearest_cell $got")
+      old.foreach(o => assert(dist === o, s"vec $id: fused distance vs array_min"))
+    }
     // the public wrapper keeps null in, null out
     val pub = vecs.select(col("vec_id"), Ivf.cellOf(col("embedding"), cents))
       .collect().map(r => r.getLong(0) -> r.get(1)).toMap
@@ -217,5 +234,11 @@ class CellKernelSpec extends AnyFunSuite with SparkSpec {
     assert(NearestCells(nullVec, bc, 2, snapIt = true).eval(null)
       .asInstanceOf[ArrayData].numElements() === 0)
     assert(!NearestCell(nullVec, bc, snapIt = true).nullable)
+    val cd = NearestCellDist(x, bc, snapIt = false).eval(null)
+      .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+    assert(cd.getInt(0) === 1 && cd.getDouble(1) === 2.0)
+    assert(NearestCellDist(nullVec, bc, snapIt = true).eval(null)
+      .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow].getInt(0) === -1)
+    assert(!NearestCellDist(nullVec, bc, snapIt = true).nullable)
   }
 }

@@ -390,7 +390,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     // same kernel, so every row pays it twice (the 65k-cell IVF probe
     // paid its cell-distance kernel in both). The fused cell kernels
     // are non-nullable for exactly this reason.
-    for (q <- Seq("q_ann_ivf", "q_ivfadc", "q_semdedup")) {
+    for (q <- Seq("q_ann_ivf", "q_ivfadc", "q_semdedup", "q_vec_outliers")) {
       val plan = SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan
       val dup = recomputedInFilter(plan)
       assert(dup.isEmpty, s"$q evaluates a kernel twice: ${dup.mkString("; ")}")

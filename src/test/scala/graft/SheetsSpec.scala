@@ -5,7 +5,14 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.graftbridge.ColumnBridge
+
 import graft.data.Pipelines
+import graft.ingest.Quantize
 import graft.sheets.Sheets
 import graft.stats.Tables
 
@@ -15,6 +22,7 @@ import graft.stats.Tables
 class SheetsSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
+  private val JobBound = 16
   private lazy val fd = Pipelines.factorData(spark, dir)
   private lazy val fdG = Pipelines.factorData(spark, dir, withGroup = true)
 
@@ -70,23 +78,74 @@ class SheetsSpec extends AnyFunSuite with SparkSpec {
     nonEmpty(s.autocorrelationMeans, "mean_autocorr")
   }
 
-  test("tear sheets own their persisted intermediates; unpersist releases them") {
+  test("tear sheets leave nothing cached; their tables outlive unpersist") {
+    val sc = spark.sparkContext
+    fd.df.count() // the factor panel's own cache is not the sheets'
+    val before = sc.getRDDStorageInfo.map(_.id).toSet
     val s = Sheets.createTurnoverTearSheet(fd)
-    assert(s.cached.nonEmpty, "sheet should register its persisted frames")
-    s.quantileTurnoverMeans.collect() // materialize through the cache
-    assert(s.cached.forall(_.storageLevel !=
-      org.apache.spark.storage.StorageLevel.NONE))
-    s.unpersist(blocking = true)
-    assert(s.cached.forall(_.storageLevel ==
-      org.apache.spark.storage.StorageLevel.NONE))
-    // the tables stay valid — they just recompute
     assert(s.quantileTurnoverMeans.collect().nonEmpty)
-    // the full sheet cascades over its components' caches
     val full = Sheets.createFullTearSheet(fd)
-    assert(full.cached.nonEmpty)
+    Seq(full.quantileStats, full.returns.returnsTable, full.information.icSummary,
+      full.turnover.autocorrelationMeans).foreach(t => assert(t.collect().nonEmpty))
+    val added = sc.getRDDStorageInfo.filterNot(i => before(i.id))
+    assert(added.isEmpty,
+      s"tear sheets left ${added.length} cached RDD(s): ${added.mkString("; ")}")
+    s.unpersist(blocking = true)
     full.unpersist(blocking = true)
-    assert(full.cached.forall(_.storageLevel ==
-      org.apache.spark.storage.StorageLevel.NONE))
+    assert(s.quantileTurnoverMeans.collect().nonEmpty)
+    assert(full.returns.spread.collect().nonEmpty)
+  }
+
+  test("a full tear sheet by group runs a bounded number of Spark jobs") {
+    val sc = spark.sparkContext
+    fdG.df.count() // ingest is not the sheet's
+    ColumnBridge.drainListenerBus(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val s = Sheets.createFullTearSheet(fdG, byGroup = true)
+      val r = s.returns
+      val i = s.information
+      val t = s.turnover
+      (Seq(s.quantileStats, r.factorReturns, r.meanQuantRateret,
+        r.meanQuantRateretByDate, r.spread, r.alphaBeta, r.returnsTable) ++
+        r.cumulativeReturns ++ r.cumulativeReturnsByQuantile ++
+        r.meanQuantRateretByGroup ++ Seq(i.ic, i.icSummary, i.monthlyMeanIc) ++
+        i.meanIcByGroup ++ Seq(t.quantileTurnover, t.autocorrelation,
+          t.quantileTurnoverMeans, t.autocorrelationMeans))
+        .foreach(_.collect())
+      ColumnBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    // eight shared passes of one to three jobs each, and no job per table
+    assert(jobs.get <= JobBound, s"full tear sheet ran ${jobs.get} jobs")
+  }
+
+  test("the factor panel is date-clustered: per-date passes plan no exchange") {
+    // quantizing by group partitions its window by (date, group); the
+    // quantizer's own repartition keeps that panel date-clustered too
+    val byGroup = Quantize.quantizeFactor(Pipelines.merged(spark, dir, withGroup = true),
+      Quantize.QuantilesInt(4), byGroup = true, noRaise = true).persist()
+    try for (panel <- Seq(fd.df, fdG.df, byGroup)) {
+      val pass = panel
+        .withColumn("__m", avg("factor").over(Window.partitionBy("date")))
+        .groupBy("date", "factor_quantile").agg(sum("__m"), count(lit(1)))
+      pass.collect()
+      // the pass's own operators, through AQE's stages; the cached
+      // relation's plan (which holds the ingest exchanges) is not a child
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+        case q: QueryStageExec => nodes(q.plan)
+        case other => other.children.flatMap(nodes)
+      })
+      val ops = nodes(pass.queryExecution.executedPlan)
+      val plan = pass.queryExecution.executedPlan
+      assert(ops.exists(_.isInstanceOf[InMemoryTableScanExec]), plan)
+      assert(!ops.exists(_.isInstanceOf[Exchange]), s"per-date pass shuffles:\n$plan")
+    } finally byGroup.unpersist(blocking = true)
   }
 
   test("one-shot returnsTable leaves nothing cached") {
